@@ -78,6 +78,10 @@ class MapIndexEngine:
         #: "distinct_col"}. Persisted as per-bucket PARTIAL aggregates next
         #: to the index (see save_reduce_view_durable)
         self._durable_views: dict[str, dict] = {}
+        #: ("index", name) / ("view", name) → the frame this engine last
+        #: materialized for it. A state or view frame that IS (identity)
+        #: its entry here is already computed, so a commit skips it.
+        self._committed: dict[tuple[str, str], DataFrame] = {}
 
     # -- function library --------------------------------------------------
 
@@ -182,6 +186,7 @@ class MapIndexEngine:
         self._status.pop(name, None)
         self._pending.pop(name, None)
         self._batches_applied.pop(name, None)
+        self._committed.pop(("index", name), None)
 
     def index_table(self, name: str) -> DataFrame:
         if name not in self._state:
@@ -189,24 +194,35 @@ class MapIndexEngine:
         return self._state[name]
 
     def checkpoint_state(self, name: str) -> DataFrame:
-        """Eagerly materialize index `name`'s state via localCheckpoint and
-        swap the truncated lineage in as the new state.
+        """Commit index `name`: materialize its state and every dependent
+        reduce view's frame (an eager localCheckpoint each) and swap the
+        truncated lineages in.
 
         This is the engine-owned commit point the streaming sinks (S7) call
         after each applied batch: exactly-once requires the batch's effect
-        to be durable (computed, not a lazy plan over the batch DataFrame)
-        before the stream checkpoint commits the offset — and it keeps the
-        lineage from growing one MERGE deeper per batch."""
+        to be durable (computed, not a lazy plan over the batch DataFrame,
+        which is only valid inside the foreachBatch call) before the stream
+        checkpoint commits the offset — and it keeps the lineage from
+        growing one MERGE deeper per batch.
+
+        A frame this engine already materialized is kept as is, so right
+        after ``apply_changes(checkpoint=True)``, which commits, this runs
+        no Spark job."""
         if name not in self._state:
             raise KeyError(f"index {name!r} has no built state")
-        self._state[name] = self._state[name].localCheckpoint(eager=True)
-        # dependent reduce views share the commit point: their lazy plans
-        # reference the micro-batch DataFrame, which is only valid inside
-        # the foreachBatch call — materialize before the offset commits
-        for d in self._views.values():
+        self._state[name] = self._materialized(("index", name), self._state[name])
+        for v, d in self._views.items():
             if d["index"] == name:
-                d["frame"] = d["frame"].localCheckpoint(eager=True)
+                d["frame"] = self._materialized(("view", v), d["frame"])
         return self._state[name]
+
+    def _materialized(self, key: tuple[str, str], df: DataFrame) -> DataFrame:
+        """``df`` computed once into an eager local checkpoint, or ``df``
+        itself when it is the frame last materialized under ``key``."""
+        if self._committed.get(key) is not df:
+            df = df.localCheckpoint(eager=True)
+            self._committed[key] = df
+        return df
 
     # -- reduce views (incremental view maintenance) -----------------------
 
@@ -253,13 +269,13 @@ class MapIndexEngine:
         the batch's group fan-out) and the parameter name is the
         contract: you asked for it.
 
-        At scale: the per-batch cost is one groupBy over the DELTA (the
-        rows apply_changes already shuffled) plus a keyed merge into the
-        view. The union-then-groupBy spelling here is the in-memory twin of
-        ``MERGE INTO view`` on the group key; the view's size is |groups|,
-        independent of base-index size. Use exact-typed measures (long /
-        decimal) — incremental and rebuilt views are then bit-identical,
-        which tests/test_mapindex.py asserts.
+        At scale: the per-batch cost is one groupBy over the view's rows
+        plus the DELTA's (fresh and retracted entries as ±1 partial rows,
+        combined map-side), one exchange. The union-then-groupBy spelling
+        here is the in-memory twin of ``MERGE INTO view`` on the group
+        key; the view's size is |groups|, independent of base-index size.
+        Use exact-typed measures (long / decimal) — incremental and rebuilt
+        views are then bit-identical, which tests/test_mapindex.py asserts.
         """
         idx = self.index_table(index_name)
         missing = [c for c in group_cols if c not in idx.columns]
@@ -378,6 +394,7 @@ class MapIndexEngine:
         if name not in self._views:
             raise KeyError(f"reduce view {name!r} does not exist")
         del self._views[name]
+        self._committed.pop(("view", name), None)
 
     def drop_reduce_view_durable(self, name: str) -> None:
         """Unregister a durable view and delete its on-disk partials (the
@@ -393,31 +410,20 @@ class MapIndexEngine:
     def _view_aggs(
         sum_col: str | None,
         distinct_col: str | None = None,
-        negate: bool = False,
         minmax_col: str | None = None,
     ) -> list[Column]:
         """Measure set per group: cnt; for a sum measure additionally
         ``__nn`` (count of NON-NULL measure values) + total; for a distinct
         measure ``__nd`` (a mergeable HLL sketch — Spark's Datasketches
-        hll_sketch_agg). __nn is what makes retraction NULL-correct: a
-        group whose last non-null measure is retracted must serve
-        total=NULL (what a rebuild's SUM gives), not the 0 a plain ± fold
-        would leave — the served total is ``CASE WHEN __nn > 0 THEN total
-        END`` (see _view_serve). Sketches cannot be negated (an HLL has no
-        delete) — callers guarantee negate and distinct_col never meet
-        (append-only guard in create_reduce_view; the durable path
-        RECOMPUTES partials instead of folding, so it never negates)."""
-        assert not (negate and distinct_col is not None)
-        # min/max cannot be negated either (an extreme has no inverse);
-        # the mutable in-memory path routes minmax views through the
-        # affected-group RECOMPUTE in _update_views instead of a fold, and
-        # the durable path always recomputes — so negate never meets it
-        assert not (negate and minmax_col is not None)
-        sign = (lambda c: -c) if negate else (lambda c: c)
-        aggs = [sign(F.count(F.lit(1))).alias("cnt")]
+        hll_sketch_agg); for an extreme ``__mn``/``__mx``. __nn is what
+        makes retraction NULL-correct: a group whose last non-null measure
+        is retracted must serve total=NULL (what a rebuild's SUM gives),
+        not the 0 a plain ± fold would leave — the served total is ``CASE
+        WHEN __nn > 0 THEN total END`` (see _view_serve)."""
+        aggs = [F.count(F.lit(1)).alias("cnt")]
         if sum_col is not None:
-            aggs.append(sign(F.count(sum_col)).alias("__nn"))
-            aggs.append(sign(F.sum(sum_col)).alias("total"))
+            aggs.append(F.count(sum_col).alias("__nn"))
+            aggs.append(F.sum(sum_col).alias("total"))
         if distinct_col is not None:
             aggs.append(F.hll_sketch_agg(distinct_col).alias("__nd"))
         if minmax_col is not None:
@@ -446,7 +452,7 @@ class MapIndexEngine:
     ) -> list[Column]:
         """Fold partial/previous measure rows: sums add, sketches union,
         extremes take min-of-mins / max-of-maxes (sound because partials
-        are never negated — see _view_aggs)."""
+        are never negated — see _row_partials)."""
         aggs = [F.sum("cnt").alias("cnt")]
         if sum_col is not None:
             aggs.append(F.sum("__nn").alias("__nn"))
@@ -505,33 +511,30 @@ class MapIndexEngine:
         cur: DataFrame,
         changed_ids: DataFrame,
         new_entries: DataFrame,
+        post: DataFrame,
         immutable: bool,
-        checkpoint: bool,
-    ) -> None:
-        """Fold one CDC batch's delta into every view on ``index_name``.
+    ) -> dict[str, DataFrame]:
+        """Every view on ``index_name`` with one CDC batch's delta folded
+        in: lazy frames by view name, for the caller to materialize and
+        swap in.
 
-        ``cur`` is the index state BEFORE the merge; the retracted old
-        contribution is ``cur ⋉ changed_ids`` — the same semi-join shape the
-        merge's anti-join prices, over the same already-shuffled inputs."""
-        views = [d for d in self._views.values() if d["index"] == index_name]
+        ``cur`` is the index state BEFORE the merge and ``post`` the state
+        after it; the retracted old contribution is ``cur ⋉ changed_ids``.
+        A view without a sketch measure folds in ONE aggregation: the
+        batch's fresh (+1) and retracted (−1) entries join the view's own
+        rows as per-row partial measures (:meth:`_row_partials`), so the
+        fold is one exchange over the view plus the delta."""
+        views = {v: d for v, d in self._views.items() if d["index"] == index_name}
         if not views:
-            return
+            return {}
         old = None
         if not immutable:
             old = cur.join(changed_ids.select("doc_id"), "doc_id", "left_semi")
-        post = None
-        if not immutable and any(d.get("minmax_col") for d in views):
-            # post-merge base, needed only by the minmax recompute path;
-            # mirrors the merge in apply_changes over the same shuffled
-            # inputs (changed_ids is checkpointed when views exist)
-            post = (
-                cur.join(changed_ids.select("doc_id"), "doc_id", "left_anti")
-                .select(*cur.columns)
-                .unionByName(new_entries)
-            )
-        for d in views:
+        out = {}
+        for v, d in views.items():
             g, s, dc = d["group"], d["sum_col"], d["distinct_col"]
             mm = d.get("minmax_col")
+            frame = d["frame"]
             if mm is not None and old is not None:
                 # The opt-in cost class (see create_reduce_view): groups
                 # the batch retracted from re-aggregate from the
@@ -543,39 +546,74 @@ class MapIndexEngine:
                     self._nullsafe_key_join(post, affected, g, "left_semi"),
                     g, s, dc, mm,
                 )
-                delta_b = self._view_agg(
-                    self._nullsafe_key_join(
-                        new_entries, affected, g, "left_anti"
-                    ),
-                    g, s, dc, mm,
+                folded = frame.unionByName(
+                    self._row_partials(new_entries, frame, g, s, mm)
                 )
                 merged = (
-                    self._nullsafe_key_join(d["frame"], affected, g, "left_anti")
-                    .unionByName(delta_b)
+                    self._nullsafe_key_join(folded, affected, g, "left_anti")
                     .groupBy(*g)
                     .agg(*self._view_merge_aggs(s, dc, mm))
                     .filter(F.col("cnt") > 0)
                     .unionByName(part_a)
                 )
             else:
-                delta = self._view_agg(new_entries, g, s, dc, mm)
-                if old is not None:
-                    # dc is None here by construction: a distinct measure
-                    # requires an immutable index, and immutable ⇒ old is
-                    # None; mm is None on this branch (handled above)
-                    delta = delta.unionByName(
-                        old.groupBy(*g).agg(*self._view_aggs(s, negate=True))
-                    )
+                if dc is None:
+                    delta = self._row_partials(new_entries, frame, g, s, mm)
+                    if old is not None:
+                        # mm is None on this branch (handled above)
+                        delta = delta.unionByName(
+                            self._row_partials(old, frame, g, s, negate=True)
+                        )
+                else:
+                    # sketches only union: aggregate the batch first. No
+                    # retraction meets them — a distinct measure requires
+                    # an immutable index, and immutable ⇒ old is None
+                    delta = self._view_agg(new_entries, g, s, dc, mm)
                 merged = (
-                    d["frame"]
-                    .unionByName(delta)
+                    frame.unionByName(delta)
                     .groupBy(*g)
                     .agg(*self._view_merge_aggs(s, dc, mm))
                     .filter(F.col("cnt") > 0)
                 )
-            if checkpoint:
-                merged = merged.localCheckpoint(eager=False)
-            d["frame"] = merged
+            out[v] = merged
+        return out
+
+    @staticmethod
+    def _row_partials(
+        entries: DataFrame,
+        like: DataFrame,
+        group_cols: list[str],
+        sum_col: str | None,
+        minmax_col: str | None = None,
+        negate: bool = False,
+    ) -> DataFrame:
+        """One partial-measure row per entry, typed like the view frame
+        ``like``: cnt = 1, __nn = 1 when the measure is not NULL, total =
+        the measure, __mn = __mx = the extreme column; negated for a
+        retraction. Folded by :meth:`_view_merge_aggs`, these give what
+        aggregating the entries with :meth:`_view_aggs` first gives, bit
+        for bit on exact types (the casts are to the SUM result types the
+        frame already holds).
+
+        Extremes cannot be negated (an extreme has no inverse), nor can
+        sketches (an HLL has no delete, so sketches have no per-row form
+        here): a mutable index routes minmax views through the
+        affected-group RECOMPUTE in _update_views, a distinct measure
+        requires an append-only index, and the durable path always
+        recomputes partials."""
+        assert not (negate and minmax_col is not None)
+        types = {f.name: f.dataType for f in like.schema.fields}
+        sign = (lambda c: -c) if negate else (lambda c: c)
+        cols = [*group_cols, sign(F.lit(1).cast(types["cnt"])).alias("cnt")]
+        if sum_col is not None:
+            cols.append(
+                sign(F.col(sum_col).isNotNull().cast(types["__nn"])).alias("__nn")
+            )
+            cols.append(sign(F.col(sum_col).cast(types["total"])).alias("total"))
+        if minmax_col is not None:
+            cols.append(F.col(minmax_col).cast(types["__mn"]).alias("__mn"))
+            cols.append(F.col(minmax_col).cast(types["__mx"]).alias("__mx"))
+        return entries.select(*cols)
 
     @staticmethod
     def _nullsafe_key_join(
@@ -733,19 +771,32 @@ class MapIndexEngine:
         """Apply one CDC micro-batch: ops are ``upsert`` / ``delete`` /
         ``expiration`` per document (reference opcodes at indexjs.go:123-189).
 
-        ``assume_unique_docs=True`` skips the changed-ids ``distinct()``
-        shuffle for sources that already deliver one change per doc per
-        batch (e.g. a pre-reduced/log-compacted feed) — the reference's
-        projector likewise dedupes upstream of the sink.
-
-        MERGE semantics, one shuffle on doc_id:
+        MERGE semantics:
           1. last change per doc wins within the batch (seq order);
-          2. every changed doc's old entries are retracted (anti-join) —
-             unless the index is Immutable (indexjs.go:158-160);
+          2. every changed doc's old entries are retracted (anti-join on
+             doc_id) — unless the index is Immutable (indexjs.go:158-160);
           3. live upserts re-emit entries (WHERE-false upserts emit nothing,
              which *is* the retraction case AddUpsertDeletion,
              indexjs.go:158-173; deletes emit nothing, AddDeletion,
-             indexjs.go:175-188).
+             indexjs.go:175-188);
+          4. every reduce view on the index folds the same delta.
+
+        ``checkpoint=True`` commits before returning: the reduced batch is
+        computed once into a frame this call owns (and releases before it
+        returns), the merge and every view fold read it from there, and
+        the new state and each view frame are materialized exactly once
+        (eager local checkpoints), so the source is read once and the
+        following :meth:`checkpoint_state` runs no job. If the batch
+        fails, nothing is swapped in. ``checkpoint=False`` only builds the
+        plans: no job runs, and the state and views stay lazy plans over
+        ``changes`` until an action or :meth:`checkpoint_state`.
+
+        Without ``seq_col`` the retraction ids are de-duplicated with a
+        ``distinct()``; ``assume_unique_docs=True`` skips it for sources
+        that already deliver one change per doc per batch (e.g. a
+        pre-reduced/log-compacted feed) — the reference's projector
+        likewise dedupes upstream of the sink. With ``seq_col`` the
+        last-change reduction already leaves one row per doc.
 
         ``retain_deleted_xattr`` (M8, indexjs.go:92-99): a delete carrying
         xattrs is treated as a mutation when the index opts in.
@@ -756,39 +807,65 @@ class MapIndexEngine:
         changes = self._validated_ops(changes, op_col)
         if seq_col:
             changes = self._last_change_per_doc(changes, doc_id_col, seq_col)
-        changed_ids, new_entries = self._delta(
-            defn, changes, doc_id_col, op_col, seq_col, xattr_col
-        )
-        if checkpoint and any(d["index"] == name for d in self._views.values()):
-            # the index merge AND each view's delta fold consume these; a
-            # lazy checkpoint computes the batch's entry pipeline once per
-            # materialization instead of once per consumer (ReuseExchange
-            # cannot span the separate checkpoint_state actions)
-            changed_ids = changed_ids.localCheckpoint(eager=False)
-            new_entries = new_entries.localCheckpoint(eager=False)
-
-        if defn.immutable:
-            merged = cur.unionByName(new_entries)
-        else:
-            if not assume_unique_docs:
-                changed_ids = changed_ids.distinct()
-            merged = (
-                cur.join(changed_ids, "doc_id", "left_anti")
-                .select(*cur.columns)  # keep canonical (key_*, doc_id) order
-                .unionByName(new_entries)
-            )
-        # reduce views absorb the SAME delta the merge prices — before the
-        # state swap, so `cur` is the pre-merge base
-        self._update_views(
-            name, cur, changed_ids, new_entries, defn.immutable, checkpoint
-        )
         if checkpoint:
-            # keep the iterative lineage shallow; a cluster deployment
-            # writes to a real table (MERGE INTO) instead
-            merged = merged.localCheckpoint(eager=False)
+            # the reduced batch this call owns: the merge and each view
+            # fold run as separate jobs, and all of them read it from here
+            changes = changes.persist()
+        try:
+            if checkpoint:
+                # computed before anything is planned over it, so the
+                # planner sees the batch's real size: a small batch's
+                # retraction ids are broadcast and the state is not
+                # shuffled
+                changes.count()
+            changed_ids, new_entries = self._delta(
+                defn, changes, doc_id_col, op_col, seq_col, xattr_col
+            )
+            if defn.immutable:
+                merged = cur.unionByName(new_entries)
+            else:
+                if not (seq_col or assume_unique_docs):
+                    changed_ids = changed_ids.distinct()
+                merged = (
+                    cur.join(changed_ids, "doc_id", "left_anti")
+                    .select(*cur.columns)  # keep canonical (key_*, doc_id) order
+                    .unionByName(new_entries)
+                )
+            if checkpoint:
+                merged = self._materialized(
+                    ("index", name), self._bounded(name, cur, merged)
+                )
+            frames = self._update_views(
+                name, cur, changed_ids, new_entries, merged, defn.immutable
+            )
+            if checkpoint:
+                frames = {
+                    v: self._materialized(("view", v), f) for v, f in frames.items()
+                }
+        finally:
+            if checkpoint:
+                changes.unpersist()
         self._state[name] = merged
+        for v, f in frames.items():
+            self._views[v]["frame"] = f
         self._batches_applied[name] = self._batches_applied.get(name, 0) + 1
         return merged
+
+    def _bounded(self, name: str, cur: DataFrame, merged: DataFrame) -> DataFrame:
+        """``merged`` on at most as many partitions as the committed state
+        ``cur`` holds or ``spark.sql.shuffle.partitions``, whichever is
+        more. The merge's union appends the batch's partitions to the
+        state's, and when the retraction anti-join is a broadcast nothing
+        re-shuffles the state, so the count would otherwise grow with
+        every batch. A lazy ``cur`` is left alone: counting its
+        partitions would run its plan."""
+        if cur is not self._committed.get(("index", name)):
+            return merged
+        n = max(
+            cur.rdd.getNumPartitions(),
+            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+        )
+        return merged.coalesce(n)
 
     def apply_backlog(
         self,
@@ -829,14 +906,11 @@ class MapIndexEngine:
                 changes.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", *([batch_col] if batch_col else []))
-                # the merge reads the reduced backlog twice (retraction ids
-                # + fresh entries); both consumers share the window's
-                # Exchange, so ReuseExchange materializes that shuffle once
-                # and only the cheap pipelined window re-runs per consumer.
-                # (A lazy localCheckpoint here would dedup the window too,
-                # but costs an eager physical-planning round-trip at
-                # construction plus an extra scheduler job — measured
-                # slower end-to-end than the recompute it saves.)
+                # no materialization here: with checkpoint=True
+                # apply_changes computes the reduced backlog once into the
+                # frame it owns; with checkpoint=False both readers of it
+                # (retraction ids, fresh entries) share the window's
+                # Exchange in the one lazy plan (ReuseExchange)
             )
         out = self.apply_changes(
             name,

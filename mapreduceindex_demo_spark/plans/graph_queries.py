@@ -373,7 +373,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         return deg.agg(
             F.lit(r).alias("round"),
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            (F.sum("c") / 2).cast("long").alias("n_edges"),
+            # an empty edge set has no degrees: SUM gives NULL, the
+            # oracle's COUNT(*) // 2 gives 0
+            F.coalesce(F.sum("c") / 2, F.lit(0)).cast("long").alias("n_edges"),
         )
 
     def degree(e):

@@ -135,8 +135,9 @@ def run_streaming_index_maintenance(
             op_col="op",
             seq_col=seq_col,
         )
-        # materialize now: exactly-once requires the batch's effect to be
-        # durable before the checkpoint commits the offset
+        # the commit point: exactly-once requires the batch's effect to be
+        # durable before the checkpoint commits the offset (apply_changes
+        # has committed already, so this runs no job)
         eng.checkpoint_state(defn.name)
 
     q = (

@@ -72,3 +72,36 @@ def test_kcore_plan_semi_joins_no_cartesian(spark):
     assert "CartesianProduct" not in plan, plan
     assert "LeftSemi" in plan, plan
     assert "InMemoryTableScan" in plan, plan
+
+
+def test_kcore_drained_core_counts_zero_edges(spark, tmp_path):
+    """A graph with no node of degree >= k peels to an empty core: the
+    drained rounds serve 0 nodes and 0 edges (not a NULL edge count),
+    exactly like the oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduceindex_demo_spark.plans.graph_queries import _kcore_oracle
+
+    # one order per customer, three suppliers each: every degree is
+    # far below k
+    orders = pa.table({"o_orderkey": [1, 2, 3], "o_custkey": [10, 20, 30]})
+    lineitem = pa.table(
+        {"l_orderkey": [1, 1, 2, 2, 3, 3], "l_suppkey": [5, 6, 5, 7, 6, 7]}
+    )
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    pq.write_table(lineitem, tmp_path / "lineitem.parquet")
+    got = [
+        tuple(r)
+        for r in QUERIES["graph_kcore_decomposition"].fn(spark, str(tmp_path)).collect()
+    ]
+    con = duckdb.connect()
+    for name in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM "
+            f"read_parquet('{tmp_path / (name + '.parquet')}')"
+        )
+    want = [tuple(r) for r in con.sql(_kcore_oracle()).fetchall()]
+    assert want[0] == (0, 6, 6)
+    assert want[1:] == [(r, 0, 0) for r in range(1, _KCORE_ROUNDS + 1)]
+    assert got == want
