@@ -20,20 +20,23 @@ Spark re-expression:
   (indexjs.go:77-81): an exception yields no entries.
 - **Incremental maintenance** (M6/M7) is a per-batch anti-join MERGE:
   retract all entries of changed doc-ids, insert fresh entries for live
-  upserts. Retraction is by the ``doc_id`` column, which makes the
-  reference's old-key (``okey``) machinery unnecessary — the index itself
-  carries the join key, so no back-index lookup and no old-value plumbing.
+  upserts. Retraction is by the ``doc_id`` column the index carries: that
+  anti-join IS the back-index lookup the reference's old-key (``okey``)
+  shipping avoids by mapping the document's old value as well
+  (indexjs.go:103-108, 134-138). Only the lookup exists here.
 - **At scale**: entries are hash/range-partitioned by declared partition
-  keys (P1/P2); the MERGE is a shuffle on doc_id only; state between
-  batches would live in a real table (Delta/Iceberg MERGE INTO) — here it
-  is a DataFrame lineage with periodic local checkpoints.
+  keys (P1/P2); a committed MERGE reads its batch once, and a small
+  batch's retraction ids are broadcast, so the state is not shuffled;
+  state between batches would live in a real table (Delta/Iceberg MERGE
+  INTO) — here it is a DataFrame lineage with local checkpoints.
 """
 
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,6 +46,15 @@ from mapreduceindex_demo_spark.sources import hadoopfs
 
 #: inclusion flags for range scans (reference Inclusion enum, index.go:31-37)
 INCL_NEITHER, INCL_LOW, INCL_HIGH, INCL_BOTH = 0, 1, 2, 3
+
+#: the measure fields of a reduce view's descriptor, by the keyword names
+#: the _view_* helpers take them under
+_MEASURES = ("sum_col", "distinct_col", "minmax_col")
+
+
+def _measures(d: dict) -> dict:
+    """The measure fields of a view descriptor (or view sidecar)."""
+    return {m: d.get(m) for m in _MEASURES}
 
 
 def _key_cols(n: int) -> list[str]:
@@ -125,17 +137,7 @@ class MapIndexEngine:
         self._state[name] = entries
         self._status[name] = self.ST_ACTIVE
         self._batches_applied.setdefault(name, 0)
-        # a from-scratch rebuild resets dependent reduce views to a fresh
-        # full aggregation over the new base
-        for d in self._views.values():
-            if d["index"] == name:
-                d["frame"] = self._view_agg(
-                    entries,
-                    d["group"],
-                    d["sum_col"],
-                    d["distinct_col"],
-                    d.get("minmax_col"),
-                )
+        self._rederive_views(name, entries)
         return entries
 
     def build_deferred(
@@ -154,7 +156,8 @@ class MapIndexEngine:
         scan job), then derive each index's entry plan from the
         materialized snapshot, so no per-index re-scan of the source ever
         happens (asserted in tests/test_mapindex.py). The streaming path
-        already amortizes the same way (run_streaming_multi_index_maintenance).
+        shares its feed the same way: one readStream and one offset log
+        serve every index given to run_streaming_index_maintenance.
 
         Callers with wide sources should project to the needed columns
         before calling — the snapshot holds exactly what it is given.
@@ -323,9 +326,7 @@ class MapIndexEngine:
         d = self._views[name]
         if consistency in ("session", "query"):
             self.drain_pending(d["index"])
-        return self._view_serve(
-            d["frame"], d["sum_col"], d["distinct_col"], d.get("minmax_col")
-        )
+        return self._view_serve(d["frame"], **_measures(d))
 
     def serve_aggregate(
         self,
@@ -443,6 +444,15 @@ class MapIndexEngine:
         return entries.groupBy(*group_cols).agg(
             *cls._view_aggs(sum_col, distinct_col, minmax_col=minmax_col)
         )
+
+    def _rederive_views(self, name: str, state: DataFrame) -> None:
+        """Point every in-memory view on index ``name`` at a fresh
+        aggregation of ``state``, from the view's whole descriptor: the
+        path for a new base that no delta fold describes (a rebuild, a
+        reopened index, a merge through the durable table)."""
+        for d in self._views.values():
+            if d["index"] == name:
+                d["frame"] = self._view_agg(state, d["group"], **_measures(d))
 
     @staticmethod
     def _view_merge_aggs(
@@ -766,7 +776,6 @@ class MapIndexEngine:
         seq_col: str | None = None,
         xattr_col: str | None = None,
         checkpoint: bool = True,
-        assume_unique_docs: bool = False,
     ) -> DataFrame:
         """Apply one CDC micro-batch: ops are ``upsert`` / ``delete`` /
         ``expiration`` per document (reference opcodes at indexjs.go:123-189).
@@ -791,81 +800,17 @@ class MapIndexEngine:
         plans: no job runs, and the state and views stay lazy plans over
         ``changes`` until an action or :meth:`checkpoint_state`.
 
-        Without ``seq_col`` the retraction ids are de-duplicated with a
-        ``distinct()``; ``assume_unique_docs=True`` skips it for sources
-        that already deliver one change per doc per batch (e.g. a
-        pre-reduced/log-compacted feed) — the reference's projector
-        likewise dedupes upstream of the sink. With ``seq_col`` the
-        last-change reduction already leaves one row per doc.
+        With ``seq_col`` the last-change reduction leaves one row per doc;
+        without it the retraction ids are de-duplicated with a
+        ``distinct()``.
 
         ``retain_deleted_xattr`` (M8, indexjs.go:92-99): a delete carrying
         xattrs is treated as a mutation when the index opts in.
         """
-        defn = self.catalog.get_index(name)
-        cur = self.index_table(name)
-
-        changes = self._validated_ops(changes, op_col)
-        if seq_col:
-            changes = self._last_change_per_doc(changes, doc_id_col, seq_col)
-        if checkpoint:
-            # the reduced batch this call owns: the merge and each view
-            # fold run as separate jobs, and all of them read it from here
-            changes = changes.persist()
-        try:
-            if checkpoint:
-                # computed before anything is planned over it, so the
-                # planner sees the batch's real size: a small batch's
-                # retraction ids are broadcast and the state is not
-                # shuffled
-                changes.count()
-            changed_ids, new_entries = self._delta(
-                defn, changes, doc_id_col, op_col, seq_col, xattr_col
-            )
-            if defn.immutable:
-                merged = cur.unionByName(new_entries)
-            else:
-                if not (seq_col or assume_unique_docs):
-                    changed_ids = changed_ids.distinct()
-                merged = (
-                    cur.join(changed_ids, "doc_id", "left_anti")
-                    .select(*cur.columns)  # keep canonical (key_*, doc_id) order
-                    .unionByName(new_entries)
-                )
-            if checkpoint:
-                merged = self._materialized(
-                    ("index", name), self._bounded(name, cur, merged)
-                )
-            frames = self._update_views(
-                name, cur, changed_ids, new_entries, merged, defn.immutable
-            )
-            if checkpoint:
-                frames = {
-                    v: self._materialized(("view", v), f) for v, f in frames.items()
-                }
-        finally:
-            if checkpoint:
-                changes.unpersist()
-        self._state[name] = merged
-        for v, f in frames.items():
-            self._views[v]["frame"] = f
-        self._batches_applied[name] = self._batches_applied.get(name, 0) + 1
-        return merged
-
-    def _bounded(self, name: str, cur: DataFrame, merged: DataFrame) -> DataFrame:
-        """``merged`` on at most as many partitions as the committed state
-        ``cur`` holds or ``spark.sql.shuffle.partitions``, whichever is
-        more. The merge's union appends the batch's partitions to the
-        state's, and when the retraction anti-join is a broadcast nothing
-        re-shuffles the state, so the count would otherwise grow with
-        every batch. A lazy ``cur`` is left alone: counting its
-        partitions would run its plan."""
-        if cur is not self._committed.get(("index", name)):
-            return merged
-        n = max(
-            cur.rdd.getNumPartitions(),
-            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+        return self._apply(
+            name, changes, doc_id_col, op_col, seq_col=seq_col,
+            xattr_col=xattr_col, checkpoint=checkpoint,
         )
-        return merged.coalesce(n)
 
     def apply_backlog(
         self,
@@ -886,46 +831,125 @@ class MapIndexEngine:
         the batches in ``(batch, seq)`` order: under sequential replay each
         later batch retracts everything an earlier batch wrote for the same
         doc, so only the per-doc FINAL change ever survives — which is
-        exactly what the single ``row_number`` reduction here keeps
-        (equivalence is asserted against the literal fold in
-        tests/test_mapindex_backlog.py). The wire cost is one shuffle on
-        doc_id + one anti-join REGARDLESS of backlog depth, where the fold
-        pays an anti-join per batch — the difference between O(1) and
-        O(batches) plan depth when an index re-attaches after falling far
-        behind (the scenario the reference handles with a dedicated
-        CATCHUP stream).
+        exactly what the single ``row_number`` reduction over
+        ``(batch_col, seq_col)`` keeps (equivalence is asserted against the
+        literal fold in tests/test_mapindex_backlog.py). The wire cost is
+        one shuffle on doc_id + one anti-join REGARDLESS of backlog depth,
+        where the fold pays an anti-join per batch — the difference between
+        O(1) and O(batches) plan depth when an index re-attaches after
+        falling far behind (the scenario the reference handles with a
+        dedicated CATCHUP stream).
         """
-        order_cols = [c for c in (batch_col, seq_col) if c]
-        if order_cols:
-            from pyspark.sql import Window
+        return self._apply(
+            name, changes, doc_id_col, op_col, seq_col=seq_col,
+            batch_col=batch_col, checkpoint=checkpoint,
+            batches=max(n_batches or 1, 1),
+        )
 
-            w = Window.partitionBy(doc_id_col).orderBy(
-                *[F.desc(c) for c in order_cols]
+    def _apply(
+        self,
+        name: str,
+        changes: DataFrame,
+        doc_id_col: str,
+        op_col: str,
+        *,
+        seq_col: str | None,
+        batch_col: str | None = None,
+        xattr_col: str | None = None,
+        checkpoint: bool,
+        batches: int = 1,
+    ) -> DataFrame:
+        """The in-memory commit behind :meth:`apply_changes` and
+        :meth:`apply_backlog`; ``batches`` is what the call adds to the
+        applied-batch count."""
+        defn = self.catalog.get_index(name)
+        cur = self.index_table(name)
+        with self._cdc_batch(
+            defn, changes, doc_id_col, op_col, seq_col, batch_col, xattr_col,
+            commit=checkpoint,
+        ) as (changed_ids, new_entries):
+            merged = self._merge(defn, cur, changed_ids, new_entries)
+            if checkpoint:
+                merged = self._materialized(
+                    ("index", name), self._bounded(name, cur, merged)
+                )
+            frames = self._update_views(
+                name, cur, changed_ids, new_entries, merged, defn.immutable
             )
+            if checkpoint:
+                frames = {
+                    v: self._materialized(("view", v), f) for v, f in frames.items()
+                }
+        self._state[name] = merged
+        for v, f in frames.items():
+            self._views[v]["frame"] = f
+        self._batches_applied[name] = self._batches_applied.get(name, 0) + batches
+        return merged
+
+    def _bounded(self, name: str, cur: DataFrame, merged: DataFrame) -> DataFrame:
+        """``merged`` on at most as many partitions as the committed state
+        ``cur`` holds or ``spark.sql.shuffle.partitions``, whichever is
+        more. The merge's union appends the batch's partitions to the
+        state's, and when the retraction anti-join is a broadcast nothing
+        re-shuffles the state, so the count would otherwise grow with
+        every batch. A lazy ``cur`` is left alone: counting its
+        partitions would run its plan."""
+        if cur is not self._committed.get(("index", name)):
+            return merged
+        n = max(
+            cur.rdd.getNumPartitions(),
+            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+        )
+        return merged.coalesce(n)
+
+    # -- CDC merge core (shared by in-memory and durable paths) ------------
+
+    @contextmanager
+    def _cdc_batch(
+        self,
+        defn: IndexDefn,
+        changes: DataFrame,
+        doc_id_col: str,
+        op_col: str,
+        seq_col: str | None,
+        batch_col: str | None,
+        xattr_col: str | None,
+        commit: bool,
+    ):
+        """The one owner of a CDC batch, for every apply path: validate
+        the ops, keep the last change per doc over ``(batch_col,
+        seq_col)`` (dropping ``batch_col``), and yield the reduced batch's
+        ``(retraction ids, fresh entries)`` — see :meth:`_delta`.
+
+        With ``commit`` the reduced batch is persisted and counted once
+        before anything is planned over it, so every reader (the merge,
+        each view fold, the durable path's bucket list) reads it from that
+        frame, and the planner sees the batch's real size: a small batch's
+        retraction ids are broadcast and the state is not shuffled. The
+        frame is released when the block exits, failed or not, so every
+        job reading the batch must run inside it. Without ``commit`` no
+        job runs and both yielded frames stay lazy plans over
+        ``changes``, sharing the reduction's Exchange (ReuseExchange)."""
+        order = [c for c in (batch_col, seq_col) if c]
+        changes = self._validated_ops(changes, op_col)
+        if order:
+            w = Window.partitionBy(doc_id_col).orderBy(*[F.desc(c) for c in order])
             changes = (
                 changes.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", *([batch_col] if batch_col else []))
-                # no materialization here: with checkpoint=True
-                # apply_changes computes the reduced backlog once into the
-                # frame it owns; with checkpoint=False both readers of it
-                # (retraction ids, fresh entries) share the window's
-                # Exchange in the one lazy plan (ReuseExchange)
             )
-        out = self.apply_changes(
-            name,
-            changes,
-            doc_id_col,
-            op_col,
-            seq_col=None,  # reduced above, across batches
-            checkpoint=checkpoint,
-            assume_unique_docs=True,
-        )
-        if n_batches and n_batches > 1:
-            self._batches_applied[name] += n_batches - 1
-        return out
-
-    # -- CDC merge core (shared by in-memory and durable paths) ------------
+        if commit:
+            changes = changes.persist()
+        try:
+            if commit:
+                changes.count()
+            yield self._delta(
+                defn, changes, doc_id_col, op_col, seq_col, xattr_col, bool(order)
+            )
+        finally:
+            if commit:
+                changes.unpersist()
 
     def _validated_ops(self, changes: DataFrame, op_col: str) -> DataFrame:
         """ADVICE r1: a NULL/typo'd opcode must ERROR, not silently retract
@@ -945,19 +969,6 @@ class MapIndexEngine:
             ),
         )
 
-    def _last_change_per_doc(
-        self, changes: DataFrame, doc_id_col: str, seq_col: str
-    ) -> DataFrame:
-        """Last change per doc wins within the batch (seq order)."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(doc_id_col).orderBy(F.desc(seq_col))
-        return (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
     def _delta(
         self,
         defn: IndexDefn,
@@ -966,9 +977,12 @@ class MapIndexEngine:
         op_col: str,
         seq_col: str | None,
         xattr_col: str | None,
+        one_row_per_doc: bool,
     ) -> tuple[DataFrame, DataFrame]:
         """One reduced CDC batch → (retraction ids, fresh entries):
-          - every changed doc's old entries are retracted (by doc_id);
+          - every changed doc's old entries are retracted (by doc_id); the
+            ids are de-duplicated unless the batch already holds one row
+            per doc (``one_row_per_doc``);
           - live upserts re-emit entries (WHERE-false upserts emit nothing,
             which *is* AddUpsertDeletion, indexjs.go:158-173; deletes emit
             nothing, AddDeletion, indexjs.go:175-188);
@@ -984,7 +998,21 @@ class MapIndexEngine:
             defn, self._entries(defn, live, doc_id_col, seq_col)
         )
         changed_ids = changes.select(F.col(doc_id_col).alias("doc_id"))
+        if not one_row_per_doc:
+            changed_ids = changed_ids.distinct()
         return changed_ids, new_entries
+
+    @staticmethod
+    def _merge(
+        defn: IndexDefn, cur: DataFrame, changed_ids: DataFrame, new_entries: DataFrame
+    ) -> DataFrame:
+        """The MERGE: retract every changed doc's entries from ``cur``
+        (anti-join on doc_id) and add the fresh ones; an Immutable index
+        never retracts (indexjs.go:158-160), so it only appends."""
+        if not defn.immutable:
+            # keep the canonical column order (key_*, doc_id[, __bucket])
+            cur = cur.join(changed_ids, "doc_id", "left_anti").select(*cur.columns)
+        return cur.unionByName(new_entries)
 
     # -- durable persistence (index.go:173-214; dataport sink
     # -- indexjs.go:129-188 writing through to storage) ---------------------
@@ -1029,13 +1057,16 @@ class MapIndexEngine:
         )
 
     def _read_durable_state(self, path: str, schema) -> DataFrame:
-        """Read persisted entries; an index whose every bucket was retracted
-        has no parquet files left, so fall back to an empty frame with the
-        recorded entry schema."""
+        """Read persisted entries with the recorded entry ``schema`` (no
+        schema-inference job); an index whose every bucket was retracted
+        has no parquet files left, so fall back to an empty frame."""
         if any(
             e.startswith("__bucket=") for e in self._hfs(path).list_names(path)
         ):
-            return self.spark.read.parquet(path).drop("__bucket")
+            full = T.StructType(
+                [*schema.fields, T.StructField("__bucket", T.IntegerType())]
+            )
+            return self.spark.read.schema(full).parquet(path).drop("__bucket")
         return self.spark.createDataFrame([], schema)
 
     def save_index(self, name: str, path: str, buckets: int | None = None) -> None:
@@ -1068,9 +1099,7 @@ class MapIndexEngine:
         # any registered durable view against the new layout/bucketing
         for vname, d in list(self._durable_views.items()):
             if d["index"] == name:
-                self.save_reduce_view_durable(
-                    vname, name, d["group"], d["sum_col"], d["distinct_col"]
-                )
+                self.save_reduce_view_durable(vname, name, d["group"], **_measures(d))
 
     @staticmethod
     def _key_sorted(out: DataFrame) -> DataFrame:
@@ -1134,12 +1163,8 @@ class MapIndexEngine:
                     defn.name, entry[len("_view_"):]
                 )
         # in-memory views created against a PREVIOUS state of this index
-        # re-derive from the reopened state (mirrors build())
-        for d in self._views.values():
-            if d["index"] == defn.name:
-                d["frame"] = self._view_agg(
-                    state, d["group"], d["sum_col"], d["distinct_col"]
-                )
+        # re-derive from the reopened state (as in build())
+        self._rederive_views(defn.name, state)
         return state
 
     # -- durable reduce views ---------------------------------------------
@@ -1211,34 +1236,21 @@ class MapIndexEngine:
             .partitionBy("__bucket")
             .parquet(vpath)
         )
-        self._hfs(vpath).write_text(
-            hadoopfs.join(vpath, self.VIEW_META),
-            json.dumps(
-                {
-                    "index": index_name,
-                    "group": list(group_cols),
-                    "sum_col": sum_col,
-                    "distinct_col": distinct_col,
-                    "minmax_col": minmax_col,
-                    "partial_schema": json.loads(
-                        T.StructType(
-                            [
-                                f
-                                for f in partials.schema.fields
-                                if f.name != "__bucket"
-                            ]
-                        ).json()
-                    ),
-                }
-            ),
-        )
-        self._durable_views[name] = {
+        desc = {
             "index": index_name,
             "group": list(group_cols),
             "sum_col": sum_col,
             "distinct_col": distinct_col,
             "minmax_col": minmax_col,
         }
+        partial_schema = T.StructType(
+            [f for f in partials.schema.fields if f.name != "__bucket"]
+        )
+        self._hfs(vpath).write_text(
+            hadoopfs.join(vpath, self.VIEW_META),
+            json.dumps({**desc, "partial_schema": json.loads(partial_schema.json())}),
+        )
+        self._durable_views[name] = desc
 
     def load_reduce_view_durable(self, index_name: str, name: str) -> None:
         """Reopen a persisted view from its sidecar (the index must already
@@ -1258,9 +1270,7 @@ class MapIndexEngine:
         self._durable_views[name] = {
             "index": index_name,
             "group": list(meta["group"]),
-            "sum_col": meta["sum_col"],
-            "distinct_col": meta.get("distinct_col"),
-            "minmax_col": meta.get("minmax_col"),
+            **_measures(meta),
         }
 
     def reduce_view_table_durable(self, name: str) -> DataFrame:
@@ -1268,14 +1278,7 @@ class MapIndexEngine:
         if name not in self._durable_views:
             raise KeyError(f"durable reduce view {name!r} does not exist")
         dv = self._durable_views[name]
-        index_name, g, s, dc, mm = (
-            dv["index"],
-            dv["group"],
-            dv["sum_col"],
-            dv["distinct_col"],
-            dv.get("minmax_col"),
-        )
-        path, _ = self._durable[index_name]
+        path, _ = self._durable[dv["index"]]
         vpath = self._view_dir(path, name)
         if any(
             e.startswith("__bucket=") for e in self._hfs(vpath).list_names(vpath)
@@ -1288,8 +1291,10 @@ class MapIndexEngine:
             partials = self.spark.createDataFrame(
                 [], T.StructType.fromJson(meta["partial_schema"])
             )
-        final = partials.groupBy(*g).agg(*self._view_merge_aggs(s, dc, mm))
-        return self._view_serve(final, s, dc, mm)
+        final = partials.groupBy(*dv["group"]).agg(
+            *self._view_merge_aggs(**_measures(dv))
+        )
+        return self._view_serve(final, **_measures(dv))
 
     def _update_durable_views(
         self, index_name: str, path: str, affected, full_schema
@@ -1301,9 +1306,7 @@ class MapIndexEngine:
         even when the merge emptied the whole index: the empty partials
         then drive the unchanged-listing drop of the view partitions."""
         todo = [
-            (v, d["group"], d["sum_col"], d["distinct_col"], d.get("minmax_col"))
-            for v, d in self._durable_views.items()
-            if d["index"] == index_name
+            (v, d) for v, d in self._durable_views.items() if d["index"] == index_name
         ]
         if not todo:
             return
@@ -1312,10 +1315,10 @@ class MapIndexEngine:
             .parquet(path)
             .filter(F.col("__bucket").isin(list(affected)))
         )
-        for vname, g, s, dc, mm in todo:
+        for vname, d in todo:
             vpath = self._view_dir(path, vname)
-            partials = cur.groupBy("__bucket", *g).agg(
-                *self._view_aggs(s, dc, minmax_col=mm)
+            partials = cur.groupBy("__bucket", *d["group"]).agg(
+                *self._view_aggs(**_measures(d))
             )
             hadoopfs.dynamic_overwrite_dropping_emptied(
                 self.spark,
@@ -1343,29 +1346,10 @@ class MapIndexEngine:
         :meth:`apply_backlog` — then apply it as ONE bucket-pruned
         idempotent partition rewrite. The storage cost of re-attaching a
         far-behind index is one merge regardless of backlog depth."""
-        order_cols = [c for c in (batch_col, seq_col) if c]
-        if order_cols:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(doc_id_col).orderBy(
-                *[F.desc(c) for c in order_cols]
-            )
-            changes = (
-                changes.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", *([batch_col] if batch_col else []))
-            )
-        out = self.apply_changes_durable(
-            name, changes, doc_id_col, op_col, seq_col=None
+        return self._apply_durable(
+            name, changes, doc_id_col, op_col, seq_col=seq_col,
+            batch_col=batch_col, batches=max(n_batches or 1, 1),
         )
-        if n_batches and n_batches > 1:
-            self._batches_applied[name] += n_batches - 1
-            path, k = self._durable[name]
-            entry_schema = T.StructType(
-                [f for f in out.schema.fields if f.name != "__bucket"]
-            )
-            self._write_sidecar(name, path, k, entry_schema)
-        return out
 
     def rebucket_index(self, name: str, buckets: int) -> None:
         """Change a durable index's bucket count — the Spark twin of the
@@ -1422,38 +1406,36 @@ class MapIndexEngine:
         upstream still yields exactly-once index state (T1).
 
         Cost model at 100 TB: the scan is pruned to the affected bucket
-        dirs (static partition pruning via the isin filter below), the
-        merge shuffles only those buckets plus the batch, and the rewrite
-        is proportional to affected-bucket bytes — never to index size.
+        dirs (static partition pruning on ``__bucket``), the merge reads
+        only those buckets plus the batch (read once, as in
+        :meth:`apply_changes`), and the rewrite is proportional to
+        affected-bucket bytes — never to index size.
         """
+        return self._apply_durable(
+            name, changes, doc_id_col, op_col, seq_col=seq_col, xattr_col=xattr_col
+        )
+
+    def _apply_durable(
+        self,
+        name: str,
+        changes: DataFrame,
+        doc_id_col: str,
+        op_col: str,
+        *,
+        seq_col: str | None,
+        batch_col: str | None = None,
+        xattr_col: str | None = None,
+        batches: int = 1,
+    ) -> DataFrame:
+        """The durable commit behind :meth:`apply_changes_durable` and
+        :meth:`apply_backlog_durable`; ``batches`` is what the call adds to
+        the applied-batch count."""
         if name not in self._durable:
             raise KeyError(
                 f"index {name!r} is not durable; save_index() or load_index() first"
             )
         path, k = self._durable[name]
         defn = self.catalog.get_index(name)
-
-        changes = self._validated_ops(changes, op_col)
-        if seq_col:
-            changes = self._last_change_per_doc(changes, doc_id_col, seq_col)
-        # the reduced batch is consumed three times (affected-bucket agg,
-        # retraction ids, fresh entries) — materialize it once
-        changes = changes.localCheckpoint(eager=False)
-
-        # Affected-bucket id list: O(buckets) driver-side METADATA (≤k small
-        # ints, independent of data volume) — the analogue of the vbucket
-        # list a DCP StreamBegin carries. This is a metadata action like the
-        # parquet-footer offsets in session.parquet_col_max, not a data
-        # collect: its size is bounded by the bucket count however large
-        # the batch or the index grows.
-        affected = sorted(
-            int(r["__b"])
-            for r in changes.select(
-                self._bucket_expr(doc_id_col, k).alias("__b")
-            )
-            .distinct()
-            .collect()
-        )
         # explicit schema from the sidecar: a bootstrapped-empty index has
         # no parquet files yet, so inference would fail; partition-column
         # type pinned so the isin prune below stays a static partition
@@ -1463,39 +1445,47 @@ class MapIndexEngine:
             "__bucket", T.IntegerType()
         )
         cur = self.spark.read.schema(full_schema).parquet(path)
-        pruned = cur.filter(F.col("__bucket").isin(affected))
-
-        changed_ids, new_entries = self._delta(
-            defn, changes, doc_id_col, op_col, seq_col, xattr_col
-        )
-        new_entries = new_entries.withColumn(
-            "__bucket", self._bucket_expr("doc_id", k)
-        )
-        if defn.immutable:
-            merged = pruned.unionByName(new_entries)
-        else:
-            merged = (
-                pruned.join(changed_ids.distinct(), "doc_id", "left_anti")
-                .select(*cur.columns)
-                .unionByName(new_entries)
+        with self._cdc_batch(
+            defn, changes, doc_id_col, op_col, seq_col, batch_col, xattr_col,
+            commit=True,
+        ) as (changed_ids, new_entries):
+            # Affected-bucket id list: O(buckets) driver-side METADATA (≤k
+            # small ints, independent of data volume) — the analogue of the
+            # vbucket list a DCP StreamBegin carries. This is a metadata
+            # action like the parquet-footer offsets in
+            # session.parquet_col_max, not a data collect: its size is
+            # bounded by the bucket count however large the batch or the
+            # index grows.
+            affected = sorted(
+                int(r["__b"])
+                for r in changed_ids.select(
+                    self._bucket_expr("doc_id", k).alias("__b")
+                )
+                .distinct()
+                .collect()
             )
-
-        hadoopfs.dynamic_overwrite_dropping_emptied(
-            self.spark,
-            self._key_sorted(
-                merged.repartition(max(len(affected), 1), F.col("__bucket"))
-            ),
-            path,
-            "__bucket",
-            lambda b: self._bucket_dir(path, b),
-            affected,
-        )
+            merged = self._merge(
+                defn,
+                cur.filter(F.col("__bucket").isin(affected)),
+                changed_ids,
+                new_entries.withColumn("__bucket", self._bucket_expr("doc_id", k)),
+            )
+            hadoopfs.dynamic_overwrite_dropping_emptied(
+                self.spark,
+                self._key_sorted(
+                    merged.repartition(max(len(affected), 1), F.col("__bucket"))
+                ),
+                path,
+                "__bucket",
+                lambda b: self._bucket_dir(path, b),
+                affected,
+            )
 
         # durable views recompute their affected partials from the index
         # state just written — post-rewrite, so the read sees the merge
         self._update_durable_views(name, path, affected, full_schema)
 
-        self._batches_applied[name] = self._batches_applied.get(name, 0) + 1
+        self._batches_applied[name] = self._batches_applied.get(name, 0) + batches
         entry_schema = T.StructType(
             [f for f in merged.schema.fields if f.name != "__bucket"]
         )
@@ -1505,11 +1495,7 @@ class MapIndexEngine:
         # any IN-MEMORY views on this index re-derive from the post-merge
         # state — the durable merge bypasses apply_changes' delta fold, and
         # leaving them on the pre-batch lineage would serve stale answers
-        for d in self._views.values():
-            if d["index"] == name:
-                d["frame"] = self._view_agg(
-                    state, d["group"], d["sum_col"], d["distinct_col"]
-                )
+        self._rederive_views(name, state)
         return state
 
     # -- consistency levels (T3: index.go:137-156) -------------------------

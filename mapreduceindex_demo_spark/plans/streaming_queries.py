@@ -163,11 +163,11 @@ def q_streaming_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         cdc_dir,
         os.path.join(work, "ckpt"),
-        defn,
+        [defn],
         CDC_SCHEMA,
         doc_id_col="user_id",
         seq_col="event_id",
-    )
+    )[defn.name]
 
 
 @query(

@@ -5,8 +5,5 @@ watermarks."""
 
 from mapreduceindex_demo_spark.streaming.maintenance import (  # noqa: F401
     materialize_cdc_files,
-    run_streaming_durable_maintenance,
     run_streaming_index_maintenance,
-    run_streaming_multi_index_durable_maintenance,
-    run_streaming_multi_index_maintenance,
 )

@@ -100,251 +100,98 @@ def _materialize_batches(
     return out_dir
 
 
+def _run_available_now(
+    spark: SparkSession, cdc_dir: str, checkpoint_dir: str, schema, apply_batch
+) -> None:
+    """The one readStream loop: replay the ``batch_*`` files under
+    ``cdc_dir`` one per micro-batch, in order, through ``apply_batch``
+    (foreachBatch ≙ the dataport sink, S7) to exhaustion
+    (Trigger.AvailableNow), with the offsets in ``checkpoint_dir``."""
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(hadoopfs.join(cdc_dir, "batch_*"))
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def run_streaming_index_maintenance(
     spark: SparkSession,
     cdc_dir: str,
     checkpoint_dir: str,
-    defn: IndexDefn,
-    schema,
-    engine: MapIndexEngine | None = None,
-    doc_id_col: str = "user_id",
-    seq_col: str = "event_id",
-) -> DataFrame:
-    """Run the maintenance stream to exhaustion (Trigger.AvailableNow) with
-    a checkpoint, applying each micro-batch through the engine's MERGE.
-    Returns the final index state. Restart-safe: rerunning with the same
-    checkpoint skips committed batches (rollback ≙ checkpoint recovery)."""
-    eng = engine or MapIndexEngine(spark)
-    if defn.name not in eng.catalog.list_indexes():
-        empty = spark.createDataFrame([], schema)
-        eng.create_index(defn, empty, doc_id_col=doc_id_col)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(hadoopfs.join(cdc_dir, "batch_*"))
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch ≙ the dataport sink (S7); idempotent MERGE per batch
-        eng.apply_changes(
-            defn.name,
-            batch_df,
-            doc_id_col=doc_id_col,
-            op_col="op",
-            seq_col=seq_col,
-        )
-        # the commit point: exactly-once requires the batch's effect to be
-        # durable before the checkpoint commits the offset (apply_changes
-        # has committed already, so this runs no job)
-        eng.checkpoint_state(defn.name)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return eng.index_table(defn.name)
-
-
-def run_streaming_durable_maintenance(
-    spark: SparkSession,
-    cdc_dir: str,
-    checkpoint_dir: str,
-    defn: IndexDefn,
-    schema,
-    index_path: str,
-    engine: MapIndexEngine | None = None,
-    doc_id_col: str = "user_id",
-    seq_col: str = "event_id",
-    buckets: int = 8,
-) -> DataFrame:
-    """Maintenance stream writing through the DURABLE index table — the
-    complete reference pipeline: DCP feed → projector → index ON STORAGE
-    (dataport sink indexjs.go:129-188 persisting via index.go:173-214).
-
-    Exactly-once (T1), the storage-backed version: each micro-batch is
-    merged with :meth:`MapIndexEngine.apply_changes_durable`, whose
-    dynamic-partition-overwrite rewrite is IDEMPOTENT — a crash after the
-    write but before the checkpoint commits the offset replays the batch
-    into identical bytes on restart. No in-memory state to pin; the
-    parquet table is the state, and it survives engine AND session death
-    (resume with a fresh engine pointing at the same index_path +
-    checkpoint_dir).
-
-    First call bootstraps: an empty index is created and saved at
-    ``index_path``; later calls (including restarts) reopen it from the
-    sidecar.
-    """
-    eng = engine or MapIndexEngine(spark)
-    if hadoopfs.HadoopFS(spark, index_path).exists(
-        hadoopfs.join(index_path, MapIndexEngine.DURABLE_META)
-    ):
-        eng.load_index(index_path)
-    else:
-        empty = spark.createDataFrame([], schema)
-        eng.create_index(defn, empty, doc_id_col=doc_id_col)
-        eng.save_index(defn.name, index_path, buckets=buckets)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(hadoopfs.join(cdc_dir, "batch_*"))
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        eng.apply_changes_durable(
-            defn.name,
-            batch_df,
-            doc_id_col=doc_id_col,
-            op_col="op",
-            seq_col=seq_col,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return eng.index_table(defn.name)
-
-
-def run_streaming_multi_index_maintenance(
-    spark: SparkSession,
-    cdc_dir: str,
-    checkpoint_dir: str,
     defns: list[IndexDefn],
     schema,
     engine: MapIndexEngine | None = None,
     doc_id_col: str = "user_id",
-    seq_col: str = "event_id",
-) -> dict[str, DataFrame]:
-    """Maintain MANY indexes from ONE mutation stream — the reference's
-    actual topic shape: ``NewMutationTopicRequest(topic, endpointType,
-    instances)`` carries a *list* of index instances and every DCP event
-    is evaluated against all of them (projector.go:237-247, evaluator map
-    keyed by instance uuid at projector.go:787-813).
-
-    One readStream + one checkpoint; each micro-batch is read once,
-    cached, and MERGEd into every index — the scan/feed cost is amortized
-    across indexes exactly as one DCP feed serves all indexes on a bucket.
-    At 100 TB this is the difference between N CDC consumers and one.
-    """
-    eng = engine or MapIndexEngine(spark)
-    empty = spark.createDataFrame([], schema)
-    for defn in defns:
-        if defn.name not in eng.catalog.list_indexes():
-            eng.create_index(defn, empty, doc_id_col=doc_id_col)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(hadoopfs.join(cdc_dir, "batch_*"))
-    )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()  # one materialization feeds all indexes
-        try:
-            for defn in defns:
-                eng.apply_changes(
-                    defn.name,
-                    batch_df,
-                    doc_id_col=doc_id_col,
-                    op_col="op",
-                    seq_col=seq_col,
-                )
-                eng.checkpoint_state(defn.name)
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return {defn.name: eng.index_table(defn.name) for defn in defns}
-
-
-def run_streaming_multi_index_durable_maintenance(
-    spark: SparkSession,
-    cdc_dir: str,
-    checkpoint_dir: str,
-    defns: list[IndexDefn],
-    schema,
-    index_paths: dict[str, str],
-    engine: MapIndexEngine | None = None,
-    doc_id_col: str = "user_id",
-    seq_col: str = "event_id",
+    seq_col: str | None = "event_id",
+    index_paths: dict[str, str] | None = None,
     buckets: int = 8,
 ) -> dict[str, DataFrame]:
-    """ONE mutation stream maintaining MANY indexes ON STORAGE — the full
-    reference topology: a topic's single DCP feed serves every index on
-    the bucket (projector.go:237-247), and each index instance persists
-    through its dataport sink to the storage nodes (indexjs.go:129-188,
-    index.go:173-214). One readStream + ONE checkpoint; each micro-batch
-    is read once, cached, and merged THROUGH each index's durable table
-    via the idempotent dynamic-partition-overwrite rewrite.
+    """Maintain the indexes ``defns`` from ONE mutation stream, run to
+    exhaustion (Trigger.AvailableNow) with one checkpoint. Returns the
+    final state of each index by name.
 
-    Exactly-once across N sinks from one offset log: a crash after some
-    (but not all) indexes committed their rewrite replays the batch into
-    ALL of them on restart — the already-written indexes rewrite the same
-    partitions with the same bytes (idempotent), the missed ones catch
-    up, and the offset only commits once every sink has applied. Survives
-    engine AND session death: resume with a fresh engine pointing at the
-    same index paths + checkpoint dir.
+    This is the reference's topic shape: ``NewMutationTopicRequest(topic,
+    endpointType, instances)`` carries a *list* of index instances and
+    every DCP event is evaluated against all of them (projector.go:237-247,
+    evaluator map keyed by instance uuid at projector.go:787-813). One
+    readStream and one offset log serve every index; each index's commit
+    reads the micro-batch once into the batch frame the engine owns, so N
+    indexes read a micro-batch N times (its file, not a shared cache).
 
-    First call bootstraps each index (empty build + save); restarts
-    reopen every index from its sidecar.
+    Without ``index_paths`` the indexes live in the engine's memory: each
+    micro-batch is merged by :meth:`MapIndexEngine.apply_changes`, which
+    commits, and ``checkpoint_state``, the engine-owned commit point, is
+    called before the stream commits the offset. Restart-safe:
+    rerunning with the same checkpoint and engine skips committed batches
+    (rollback ≙ checkpoint recovery).
+
+    With ``index_paths`` (index name → directory) every index lives ON
+    STORAGE — the complete reference pipeline, DCP feed → projector →
+    dataport sink persisting via index.go:173-214 (indexjs.go:129-188).
+    Each micro-batch is merged with
+    :meth:`MapIndexEngine.apply_changes_durable`, whose
+    dynamic-partition-overwrite rewrite is IDEMPOTENT: a crash after some
+    (or all) sinks wrote but before the offset committed replays the batch
+    into identical bytes, and the offset only commits once every sink has
+    applied. The parquet tables are the state, so the stream survives
+    engine AND session death: resume with a fresh engine on the same
+    paths and checkpoint. A first run creates each index empty and saves
+    it with ``buckets`` buckets; later runs reopen it from its sidecar.
     """
     eng = engine or MapIndexEngine(spark)
     empty = spark.createDataFrame([], schema)
     for defn in defns:
-        path = index_paths[defn.name]
-        if hadoopfs.HadoopFS(spark, path).exists(
+        path = index_paths[defn.name] if index_paths else None
+        if path and hadoopfs.HadoopFS(spark, path).exists(
             hadoopfs.join(path, MapIndexEngine.DURABLE_META)
         ):
             eng.load_index(path)
-        else:
+            continue
+        if defn.name not in eng.catalog.list_indexes():
             eng.create_index(defn, empty, doc_id_col=doc_id_col)
+        if path:
             eng.save_index(defn.name, path, buckets=buckets)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(hadoopfs.join(cdc_dir, "batch_*"))
-    )
+    args = {"doc_id_col": doc_id_col, "op_col": "op", "seq_col": seq_col}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()  # one materialization feeds all sinks
-        try:
-            for defn in defns:
-                eng.apply_changes_durable(
-                    defn.name,
-                    batch_df,
-                    doc_id_col=doc_id_col,
-                    op_col="op",
-                    seq_col=seq_col,
-                )
-        finally:
-            batch_df.unpersist()
+        for defn in defns:
+            if index_paths:
+                eng.apply_changes_durable(defn.name, batch_df, **args)
+            else:
+                eng.apply_changes(defn.name, batch_df, **args)
+                # the commit point: exactly-once requires the batch's
+                # effect to be durable before the checkpoint commits the
+                # offset (apply_changes has committed, so no job runs)
+                eng.checkpoint_state(defn.name)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(spark, cdc_dir, checkpoint_dir, schema, apply_batch)
     return {defn.name: eng.index_table(defn.name) for defn in defns}
 
 
@@ -400,8 +247,8 @@ def run_streaming_vector_index_maintenance(
     index_path: str,
 ):
     """Stream embedding mutations into the durable IVF vector index
-    (operators/vector_index.py) — the ANN twin of
-    :func:`run_streaming_durable_maintenance`: the quantizer stays frozen
+    (operators/vector_index.py) — the ANN twin of the durable
+    :func:`run_streaming_index_maintenance`: the quantizer stays frozen
     (trained at bootstrap), each micro-batch re-assigns its upserts
     against the stored centroids and dynamically overwrites only the
     affected cell directories. The rewrite is idempotent, so a batch
@@ -418,24 +265,13 @@ def run_streaming_vector_index_maintenance(
     from mapreduceindex_demo_spark.operators.vector_index import IVFVectorIndex
 
     idx = IVFVectorIndex.open(spark, index_path)
-
-    stream = (
-        spark.readStream.schema(VECTOR_CDC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(hadoopfs.join(cdc_dir, "batch_*"))
+    _run_available_now(
+        spark,
+        cdc_dir,
+        checkpoint_dir,
+        VECTOR_CDC_SCHEMA,
+        lambda batch_df, batch_id: idx.apply_changes(batch_df),
     )
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        idx.apply_changes(batch_df)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return idx
 
 

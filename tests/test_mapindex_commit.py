@@ -99,8 +99,7 @@ def test_seq_col_batch_with_repeated_docs(spark):
         if not checkpoint:
             plan = merged._jdf.queryExecution().optimizedPlan().toString()
             assert "Aggregate" not in plan, plan
-    # without seq_col (and without assume_unique_docs) the ids are
-    # de-duplicated
+    # without seq_col the ids are de-duplicated
     eng = _engine(spark)
     merged = eng.apply_changes(
         "ev",
@@ -191,3 +190,33 @@ def test_apply_persists_only_new_state_and_view(spark):
     added = set(jsc.getPersistentRDDs().keySet()) - before
     frames = (eng.index_table("ev"), eng._views["ev_by_grp"]["frame"])
     assert added == {f._jdf.queryExecution().analyzed().rdd().id() for f in frames}
+
+
+def test_durable_apply_reads_batch_once_and_releases_it(spark, tmp_path):
+    """apply_changes_durable evaluates the batch's source once (a Python
+    UDF counts the rows it sees) and leaves no new RDD persisted behind."""
+    eng = MapIndexEngine(spark)
+    rows = [(i, "abc"[i % 3], i % 5, "upsert", 0) for i in range(1, 31)]
+    eng.create_index(
+        IndexDefn(name="evd", bucket="t", sec_exprs=("grp", "v"), where_expr="v > 0"),
+        spark.createDataFrame(rows, SCHEMA),
+        doc_id_col="doc_id",
+    )
+    eng.save_index("evd", str(tmp_path / "evd"), buckets=4)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(doc_id):
+        seen.add(1)
+        return doc_id
+
+    changes = _batch(spark, BATCH).withColumn(
+        "doc_id", F.udf(count_row, "bigint")("doc_id")
+    )
+    eng.apply_changes_durable("evd", changes, **APPLY)
+    # compared by id: the context cleaner may release older RDDs meanwhile
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert seen.value == len(BATCH)
+    state = sorted(tuple(r) for r in eng.index_table("evd").collect())
+    assert [r for r in state if r[2] in (1, 2, 4, 40)] == [("b", 7, 1), ("d", 6, 40)]

@@ -507,3 +507,39 @@ def test_durable_minmax_view_retraction_safe(spark, built):
     fresh.load_index(path)
     fresh.load_reduce_view_durable("idx_durable", "rvmm")
     assert _sorted_rows(fresh.reduce_view_table_durable("rvmm")) == rebuild()
+
+    # a rebucket re-saves the index and regenerates its durable views;
+    # the min/max measure must survive into the new layout's sidecar
+    eng.rebucket_index("idx_durable", 3)
+    assert _sorted_rows(eng.reduce_view_table_durable("rvmm")) == rebuild()
+
+
+def test_in_memory_minmax_view_on_durable_index(spark, tmp_path):
+    """An IN-MEMORY min/max reduce view on a durable index keeps its
+    extremes: after apply_changes_durable and after load_index it equals
+    a fresh aggregation of the index state."""
+    eng = MapIndexEngine(spark)
+    src = _docs(spark, [("a", 1, 3.0), ("b", 1, 5.0)])
+    eng.create_index(_defn(name="idx_mm"), src, doc_id_col="doc_id")
+    eng.create_reduce_view("mm", "idx_mm", ["key_0"], minmax_col="key_1")
+    path = str(tmp_path / "mm")
+    eng.save_index("idx_mm", path, buckets=2)
+
+    def rebuild():
+        return _sorted_rows(
+            eng.index_table("idx_mm")
+            .groupBy("key_0")
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.min("key_1").alias("min_val"),
+                F.max("key_1").alias("max_val"),
+            )
+        )
+
+    changes = spark.createDataFrame(
+        [("c", 1, 4.0, "upsert")], "doc_id string, grp bigint, val double, op string"
+    )
+    eng.apply_changes_durable("idx_mm", changes, doc_id_col="doc_id", op_col="op")
+    assert _sorted_rows(eng.reduce_view_table("mm")) == rebuild() == [(1, 3, 3.0, 5.0)]
+    eng.load_index(path)
+    assert _sorted_rows(eng.reduce_view_table("mm")) == rebuild()

@@ -89,7 +89,7 @@ def test_streaming_search_index_maintenance_one_stream_two_sinks(
     from mapreduceindex_demo_spark.streaming.maintenance import (
         DOC_CDC_SCHEMA,
         materialize_document_cdc_files,
-        run_streaming_multi_index_durable_maintenance,
+        run_streaming_index_maintenance,
         search_index_defns,
     )
 
@@ -101,7 +101,7 @@ def test_streaming_search_index_maintenance_one_stream_two_sinks(
     }
 
     materialize_document_cdc_files(spark, PARITY_SF_DIR, cdc, n_files=4, upto_file=2)
-    states = run_streaming_multi_index_durable_maintenance(
+    states = run_streaming_index_maintenance(
         spark, cdc, ckpt, search_index_defns(), DOC_CDC_SCHEMA,
         index_paths=paths, doc_id_col="doc_id", seq_col=None,
     )
@@ -109,7 +109,7 @@ def test_streaming_search_index_maintenance_one_stream_two_sinks(
 
     materialize_document_cdc_files(spark, PARITY_SF_DIR, cdc, n_files=4)
     s2 = spark.newSession()
-    states = run_streaming_multi_index_durable_maintenance(
+    states = run_streaming_index_maintenance(
         s2, cdc, ckpt, search_index_defns(), DOC_CDC_SCHEMA,
         index_paths=paths, doc_id_col="doc_id", seq_col=None,
     )

@@ -12,7 +12,6 @@ from mapreduceindex_demo_spark.plans.streaming_queries import CDC_SCHEMA
 from mapreduceindex_demo_spark.session import load_table
 from mapreduceindex_demo_spark.streaming import (
     materialize_cdc_files,
-    run_streaming_durable_maintenance,
     run_streaming_index_maintenance,
 )
 from mapreduceindex_demo_spark.streaming.windows import tumbling_counts, with_watermark
@@ -60,8 +59,8 @@ def test_streaming_maintenance_kill_restart_exactly_once(spark, tmp_path):
     eng = MapIndexEngine(spark)
 
     state1 = run_streaming_index_maintenance(
-        spark, cdc, ckpt, _defn("idx_rs"), CDC_SCHEMA, engine=eng
-    )
+        spark, cdc, ckpt, [_defn("idx_rs")], CDC_SCHEMA, engine=eng
+    )["idx_rs"]
     n1 = state1.count()
     assert n1 > 0
 
@@ -69,8 +68,8 @@ def test_streaming_maintenance_kill_restart_exactly_once(spark, tmp_path):
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5)
     assert len(os.listdir(cdc)) == 5
     state2 = run_streaming_index_maintenance(
-        spark, cdc, ckpt, _defn("idx_rs"), CDC_SCHEMA, engine=eng
-    )
+        spark, cdc, ckpt, [_defn("idx_rs")], CDC_SCHEMA, engine=eng
+    )["idx_rs"]
     assert sorted(tuple(r) for r in state2.collect()) == _golden(spark)
 
 
@@ -86,16 +85,18 @@ def test_streaming_durable_maintenance_survives_engine_death(spark, tmp_path):
     idx = str(tmp_path / "idx")
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5, upto_file=3)
 
-    state1 = run_streaming_durable_maintenance(
-        spark, cdc, ckpt, _defn("idx_dur_rs"), CDC_SCHEMA, index_path=idx
-    )
+    state1 = run_streaming_index_maintenance(
+        spark, cdc, ckpt, [_defn("idx_dur_rs")], CDC_SCHEMA,
+        index_paths={"idx_dur_rs": idx},
+    )["idx_dur_rs"]
     assert state1.count() > 0  # engine from phase 1 is now dropped
 
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5)
     s2 = spark.newSession()
-    state2 = run_streaming_durable_maintenance(
-        s2, cdc, ckpt, _defn("idx_dur_rs"), CDC_SCHEMA, index_path=idx
-    )
+    state2 = run_streaming_index_maintenance(
+        s2, cdc, ckpt, [_defn("idx_dur_rs")], CDC_SCHEMA,
+        index_paths={"idx_dur_rs": idx},
+    )["idx_dur_rs"]
     assert sorted(tuple(r) for r in state2.collect()) == _golden(spark)
 
     # the durable layout holds the LSM/SSTable contract: rows inside each
@@ -219,12 +220,8 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
 def test_multi_index_single_stream_maintenance(spark, tmp_path):
     """One CDC stream maintains TWO differently-shaped indexes (the
     reference's topic carries a LIST of instances — projector.go:237-247):
-    each micro-batch is read once and MERGEd into both; both final states
-    must equal their batch golden answers."""
-    from mapreduceindex_demo_spark.streaming import (
-        run_streaming_multi_index_maintenance,
-    )
-
+    each micro-batch is MERGEd into both under one checkpoint; both final
+    states must equal their batch golden answers."""
     cdc = str(tmp_path / "cdc")
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=4)
     d1 = _defn("idx_multi_kv")
@@ -234,7 +231,7 @@ def test_multi_index_single_stream_maintenance(spark, tmp_path):
         sec_exprs=("value",),
         where_expr="event_type = 'purchase'",
     )
-    out = run_streaming_multi_index_maintenance(
+    out = run_streaming_index_maintenance(
         spark, cdc, str(tmp_path / "ckpt"), [d1, d2], CDC_SCHEMA
     )
 
@@ -311,10 +308,6 @@ def test_multi_index_durable_one_checkpoint_survives_engine_death(spark, tmp_pat
     CDC files, and resume on a NEW session + NEW engine from the same
     index paths and checkpoint. Both on-disk indexes must equal their
     windowed-SQL rebuilds over the full log."""
-    from mapreduceindex_demo_spark.streaming import (
-        run_streaming_multi_index_durable_maintenance,
-    )
-
     cdc = str(tmp_path / "cdc")
     ckpt = str(tmp_path / "ckpt")
     defn_a = _defn("idx_multi_dur_a")
@@ -330,14 +323,14 @@ def test_multi_index_durable_one_checkpoint_survives_engine_death(spark, tmp_pat
     }
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5, upto_file=3)
 
-    states1 = run_streaming_multi_index_durable_maintenance(
+    states1 = run_streaming_index_maintenance(
         spark, cdc, ckpt, [defn_a, defn_b], CDC_SCHEMA, index_paths=paths
     )
     assert states1["idx_multi_dur_a"].count() > 0  # engine now dropped
 
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5)
     s2 = spark.newSession()
-    states2 = run_streaming_multi_index_durable_maintenance(
+    states2 = run_streaming_index_maintenance(
         s2, cdc, ckpt, [defn_a, defn_b], CDC_SCHEMA, index_paths=paths
     )
     assert (
@@ -441,11 +434,11 @@ def test_streaming_maintains_reduce_view(spark, tmp_path):
     eng.create_reduce_view("rvmm", "idx_rv", ["key_1"], minmax_col="key_0")
 
     run_streaming_index_maintenance(
-        spark, cdc, ckpt, _defn("idx_rv"), CDC_SCHEMA, engine=eng
+        spark, cdc, ckpt, [_defn("idx_rv")], CDC_SCHEMA, engine=eng
     )
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5)
     run_streaming_index_maintenance(
-        spark, cdc, ckpt, _defn("idx_rv"), CDC_SCHEMA, engine=eng
+        spark, cdc, ckpt, [_defn("idx_rv")], CDC_SCHEMA, engine=eng
     )
 
     got = sorted(tuple(r) for r in eng.reduce_view_table("rv").collect())
@@ -495,16 +488,17 @@ def test_streaming_durable_view_survives_engine_death(spark, tmp_path):
     eng.create_index(_defn("idx_dur_rv"), empty, doc_id_col="user_id")
     eng.save_index("idx_dur_rv", idx, buckets=8)
     eng.save_reduce_view_durable("rv", "idx_dur_rv", ["key_1"], sum_col="key_0")
-    run_streaming_durable_maintenance(
-        spark, cdc, ckpt, _defn("idx_dur_rv"), CDC_SCHEMA, index_path=idx,
-        engine=eng,
+    run_streaming_index_maintenance(
+        spark, cdc, ckpt, [_defn("idx_dur_rv")], CDC_SCHEMA,
+        index_paths={"idx_dur_rv": idx}, engine=eng,
     )
 
     # process death; remaining CDC arrives; resume on a NEW session+engine
     materialize_cdc_files(spark, SMOKE_SF_DIR, cdc, n_files=5)
     s2 = spark.newSession()
-    run_streaming_durable_maintenance(
-        s2, cdc, ckpt, _defn("idx_dur_rv"), CDC_SCHEMA, index_path=idx
+    run_streaming_index_maintenance(
+        s2, cdc, ckpt, [_defn("idx_dur_rv")], CDC_SCHEMA,
+        index_paths={"idx_dur_rv": idx},
     )
 
     served = MapIndexEngine(spark)
