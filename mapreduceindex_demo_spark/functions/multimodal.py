@@ -98,6 +98,42 @@ def decode_media(blob: bytes) -> tuple[str, int, memoryview]:
     return codec, width, pixels
 
 
+def _decode_batch(pdf, doc_id: str):
+    """Decode every container of one Arrow batch's ``media`` column
+    (``decode_media`` parses and validates each) and concatenate the
+    pixels into ONE vector, so the raster kernels run whole-batch numpy
+    expressions instead of per-row calls (r16, guide §4.2). Returns
+    ``(ids, codecs, widths, lens, offs, arr)``: image j's pixels are
+    ``arr[offs[j]:offs[j + 1]]``, ``lens[j]`` of them."""
+    import numpy as np
+
+    m = len(pdf)
+    codecs = []
+    widths = np.empty(m, dtype=np.int64)
+    lens = np.empty(m, dtype=np.int64)
+    pix = []
+    for j, blob in enumerate(pdf["media"]):
+        codec, w, px = decode_media(blob)
+        codecs.append(codec)
+        widths[j] = w
+        lens[j] = len(px)
+        pix.append(px)
+    offs = np.zeros(m + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    arr = np.empty(int(offs[-1]), dtype=np.uint8)
+    for j in range(m):
+        if lens[j]:
+            arr[offs[j] : offs[j + 1]] = np.frombuffer(pix[j], dtype=np.uint8)
+    return pdf[doc_id].tolist(), codecs, widths, lens, offs, arr
+
+
+def _empty_frame(schema: str):
+    """The zero-row output of a kernel with DDL ``schema``."""
+    import pandas as pd
+
+    return pd.DataFrame({f.split()[0]: [] for f in schema.split(",")})
+
+
 #: frame sampling parameters: k evenly spaced fixed-width byte windows
 FRAME_COUNT = 4
 FRAME_WIDTH = 32
@@ -151,42 +187,14 @@ def decode_features(df: DataFrame, doc_id: str = "doc_id") -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        # batch-vectorized (r16, guide §4.2 — the ahash-kernel template):
-        # decode_media still parses/validates every container; the per-image
-        # sum/min/max run as whole-batch reduceat/minimum.reduceat over ONE
-        # concatenated pixel vector instead of per-row numpy calls.
+        # the per-image sum/min/max run as whole-batch reduceat over the
+        # concatenated pixel vector
         for pdf in batches:
             m = len(pdf)
             if m == 0:
-                yield pd.DataFrame(
-                    {
-                        k: []
-                        for k in (
-                            "doc_id", "codec", "width", "height", "n_pixels",
-                            "byte_sum", "min_byte", "max_byte", "mean_byte",
-                        )
-                    }
-                )
+                yield _empty_frame(FEATURE_SCHEMA)
                 continue
-            ids = pdf[doc_id].tolist()
-            codecs = []
-            widths = np.empty(m, dtype=np.int64)
-            lens = np.empty(m, dtype=np.int64)
-            pix = []
-            for j, blob in enumerate(pdf["media"]):
-                codec, w, px = decode_media(blob)
-                codecs.append(codec)
-                widths[j] = w
-                lens[j] = len(px)
-                pix.append(px)
-            offs = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
-            arr = np.empty(int(offs[-1]), dtype=np.uint8)
-            for j in range(m):
-                if lens[j]:
-                    arr[offs[j] : offs[j + 1]] = np.frombuffer(
-                        pix[j], dtype=np.uint8
-                    )
+            ids, codecs, widths, lens, offs, arr = _decode_batch(pdf, doc_id)
             nz = lens > 0
             # reduceat needs in-bounds, per-image start offsets: clip the
             # starts of empty rasters and zero their outputs afterwards
@@ -252,44 +260,18 @@ def resize_media(df: DataFrame, doc_id: str = "doc_id") -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        # batch-vectorized (r16, guide §4.2 — the ahash-kernel template):
-        # one concatenated pixel vector, the even-row/even-column mask and
-        # the positional checksum computed as whole-batch expressions keyed
-        # by a per-element image index. Checksum exactness: the weighted
-        # bincount sums integer values ≤ 255·n_out per term — integer-exact
-        # in float64 far beyond any real batch — then reduces mod 1e9+7 on
-        # int64, identical to the per-image int64 spelling.
+        # the even-row/even-column mask and the positional checksum are
+        # whole-batch expressions keyed by a per-element image index.
+        # Checksum exactness: the weighted bincount sums integer values
+        # ≤ 255·n_out per term — integer-exact in float64 far beyond any
+        # real batch — then reduces mod 1e9+7 on int64, identical to the
+        # per-image int64 spelling.
         for pdf in batches:
             m = len(pdf)
             if m == 0:
-                yield pd.DataFrame(
-                    {
-                        k: []
-                        for k in (
-                            "doc_id", "out_width", "out_height",
-                            "n_out_pixels", "out_byte_sum", "out_mean_byte",
-                            "out_pos_checksum",
-                        )
-                    }
-                )
+                yield _empty_frame(RESIZE_SCHEMA)
                 continue
-            ids = pdf[doc_id].tolist()
-            widths = np.empty(m, dtype=np.int64)
-            lens = np.empty(m, dtype=np.int64)
-            pix = []
-            for j, blob in enumerate(pdf["media"]):
-                _, w, px = decode_media(blob)
-                widths[j] = w
-                lens[j] = len(px)
-                pix.append(px)
-            offs = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
-            arr = np.empty(int(offs[-1]), dtype=np.uint8)
-            for j in range(m):
-                if lens[j]:
-                    arr[offs[j] : offs[j + 1]] = np.frombuffer(
-                        pix[j], dtype=np.uint8
-                    )
+            ids, _, widths, lens, offs, arr = _decode_batch(pdf, doc_id)
             img = np.repeat(np.arange(m, dtype=np.int64), lens)
             idx = np.arange(int(offs[-1]), dtype=np.int64) - offs[img]
             w_e = widths[img]
@@ -368,38 +350,19 @@ def ahash(
         import numpy as np
         import pandas as pd
 
-        # batch-vectorized kernel (r16, guide §4.2): the per-image spelling
-        # paid ~6 numpy allocations + a 64-step Python packing loop PER ROW;
-        # here every image in the Arrow batch is concatenated into ONE pixel
-        # vector and the grid assignment / cell sums / bit tests / packing
-        # run as single whole-batch numpy expressions (per-image identity is
-        # a composite bincount key img*64+cell). decode_media still parses
-        # and validates every container — only the arithmetic is batched.
+        # the per-image spelling paid ~6 numpy allocations + a 64-step
+        # Python packing loop PER ROW; here the grid assignment / cell sums
+        # / bit tests / packing run as single whole-batch numpy expressions
+        # (per-image identity is a composite bincount key img*64+cell).
         # Bit-exactness: cell sums are integer-valued float64 (exact below
         # 2^53), compared on int64 exactly like the per-image spelling.
         for pdf in batches:
             m = len(pdf)
             if m == 0:
-                yield pd.DataFrame({"doc_id": [], "ahash": []})
+                yield _empty_frame(AHASH_SCHEMA)
                 continue
-            ids = pdf[doc_id].tolist()
-            widths = np.empty(m, dtype=np.int64)
-            lens = np.empty(m, dtype=np.int64)
-            pix = []
-            for j, blob in enumerate(pdf["media"]):
-                _, w, px = decode_media(blob)
-                widths[j] = w
-                lens[j] = len(px)
-                pix.append(px)
-            offs = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
+            ids, _, widths, lens, offs, arr = _decode_batch(pdf, doc_id)
             total_px = int(offs[-1])
-            arr = np.empty(total_px, dtype=np.uint8)
-            for j in range(m):
-                if lens[j]:
-                    arr[offs[j] : offs[j + 1]] = np.frombuffer(
-                        pix[j], dtype=np.uint8
-                    )
             img = np.repeat(np.arange(m, dtype=np.int64), lens)
             idx = np.arange(total_px, dtype=np.int64) - offs[img]
             w_e = widths[img]

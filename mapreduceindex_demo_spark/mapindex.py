@@ -915,6 +915,7 @@ class MapIndexEngine:
         batch_col: str | None,
         xattr_col: str | None,
         commit: bool,
+        count: bool = True,
     ):
         """The one owner of a CDC batch, for every apply path: validate
         the ops, keep the last change per doc over ``(batch_col,
@@ -925,11 +926,14 @@ class MapIndexEngine:
         before anything is planned over it, so every reader (the merge,
         each view fold, the durable path's bucket list) reads it from that
         frame, and the planner sees the batch's real size: a small batch's
-        retraction ids are broadcast and the state is not shuffled. The
-        frame is released when the block exits, failed or not, so every
-        job reading the batch must run inside it. Without ``commit`` no
-        job runs and both yielded frames stay lazy plans over
-        ``changes``, sharing the reduction's Exchange (ReuseExchange)."""
+        retraction ids are broadcast and the state is not shuffled. A
+        caller whose first job inside the block reads the batch anyway
+        passes ``count=False`` and lets that job fill the frame (the
+        durable path's affected-bucket collect). The frame is released
+        when the block exits, failed or not, so every job reading the
+        batch must run inside it. Without ``commit`` no job runs and both
+        yielded frames stay lazy plans over ``changes``, sharing the
+        reduction's Exchange (ReuseExchange)."""
         order = [c for c in (batch_col, seq_col) if c]
         changes = self._validated_ops(changes, op_col)
         if order:
@@ -942,7 +946,7 @@ class MapIndexEngine:
         if commit:
             changes = changes.persist()
         try:
-            if commit:
+            if commit and count:
                 changes.count()
             yield self._delta(
                 defn, changes, doc_id_col, op_col, seq_col, xattr_col, bool(order)
@@ -1373,10 +1377,9 @@ class MapIndexEngine:
         fs = self._hfs(path)
         meta = self._read_sidecar(path)
         schema = T.StructType.fromJson(meta["entry_schema"])
-        # materialize current entries off the directory we are about to
-        # replace (localCheckpoint: the one full read)
-        cur = self._read_durable_state(path, schema).localCheckpoint(eager=True)
-        self._state[name] = cur
+        # the staging write is the one full read of the current layout;
+        # it completes before the swap below touches ``path``
+        self._state[name] = self._read_durable_state(path, schema)
         staging = path.rstrip("/") + ".__rebucket_staging"
         old = path.rstrip("/") + ".__rebucket_old"
         fs.delete(staging)  # clear a dead staging dir from a prior crash
@@ -1386,7 +1389,11 @@ class MapIndexEngine:
         fs.rename(staging, path)
         fs.delete(old)
         self._durable[name] = (path, int(buckets))
-        self._state[name] = self._read_durable_state(path, schema)
+        state = self._read_durable_state(path, schema)
+        self._state[name] = state
+        # in-memory views were derived from a read of the old layout,
+        # whose files the swap deleted
+        self._rederive_views(name, state)
 
     def apply_changes_durable(
         self,
@@ -1447,7 +1454,7 @@ class MapIndexEngine:
         cur = self.spark.read.schema(full_schema).parquet(path)
         with self._cdc_batch(
             defn, changes, doc_id_col, op_col, seq_col, batch_col, xattr_col,
-            commit=True,
+            commit=True, count=False,
         ) as (changed_ids, new_entries):
             # Affected-bucket id list: O(buckets) driver-side METADATA (≤k
             # small ints, independent of data volume) — the analogue of the
@@ -1455,7 +1462,8 @@ class MapIndexEngine:
             # action like the parquet-footer offsets in
             # session.parquet_col_max, not a data collect: its size is
             # bounded by the bucket count however large the batch or the
-            # index grows.
+            # index grows. It is the first job over the persisted batch,
+            # so it fills the batch's frame before the merge is planned.
             affected = sorted(
                 int(r["__b"])
                 for r in changed_ids.select(

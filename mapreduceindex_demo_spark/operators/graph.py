@@ -26,6 +26,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def symmetrize(edges: DataFrame, src: str, dst: str, **carry: str) -> DataFrame:
+    """Both directions of every ``(src, dst)`` edge as ``(u, v, *carry)``
+    rows, where ``carry`` maps an output name to an edge column copied
+    onto both directions (a weight). One pass (r17): each edge row
+    explodes into its two directions, where a union of two selects would
+    instantiate the caller's edge lineage once per branch — the fact
+    joins or banded pair joins behind the edges would run twice inside
+    the caller's checkpoint or persist fill. Deduplication and
+    materialization stay with the caller."""
+    rest = [F.col(c).alias(n) for n, c in carry.items()]
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("u"), F.col(dst).alias("v"), *rest),
+                F.struct(F.col(dst).alias("u"), F.col(src).alias("v"), *rest),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v", *[f"e.{n}" for n in carry])
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -42,27 +62,12 @@ def connected_components(
     # the edge list is re-joined EVERY round: checkpoint it once so the
     # caller's (possibly expensive) edge-producing lineage — e.g. the LSH
     # signature pipeline — is evaluated exactly once, not once per round
-    # (+ once per convergence probe). Symmetrization is a ONE-pass explode
-    # (r17): the previous union-of-two-selects instantiated the caller's
-    # edge lineage TWICE inside this checkpoint job — the banded pair
-    # joins behind the ahash/minhash consumers ran once per union branch.
-    # NB localCheckpoint is EXECUTOR-LOCAL block storage (lineage is
-    # truncated, so the data does not survive executor loss); a production
-    # cluster with preemptible executors would use checkpoint() to
-    # reliable storage here, same as for the per-round truncation below.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # (+ once per convergence probe). NB localCheckpoint is
+    # EXECUTOR-LOCAL block storage (lineage is truncated, so the data
+    # does not survive executor loss); a production cluster with
+    # preemptible executors would use checkpoint() to reliable storage
+    # here, same as for the per-round truncation below.
+    sym = symmetrize(edges, src, dst).distinct().localCheckpoint(eager=True)
     # label init FOLDS the first propagation round (r16 optimization):
     # round 1 of the old spelling always computed least(node, min(v))
     # from comp = node, paying one checkpoint job + one probe job to get
@@ -255,31 +260,10 @@ def pagerank(
     before calling.
     """
     # checkpoint the symmetrized list FIRST (the connected_components
-    # pattern), and symmetrize with a ONE-pass explode (r17): the union
-    # spelling instantiated the caller's (possibly expensive) edge
-    # derivation once per branch inside this checkpoint job. After this
-    # point everything derives from the checkpointed RDD and the
-    # derivation has run exactly once.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src).alias("u"),
-                        F.col(dst).alias("v"),
-                        F.col(weight).alias("w"),
-                    ),
-                    F.struct(
-                        F.col(dst).alias("u"),
-                        F.col(src).alias("v"),
-                        F.col(weight).alias("w"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v", "e.w")
-        .localCheckpoint(eager=True)
-    )
+    # pattern): after this point everything derives from the
+    # checkpointed RDD and the caller's edge derivation has run exactly
+    # once.
+    sym = symmetrize(edges, src, dst, w=weight).localCheckpoint(eager=True)
     outw = sym.groupBy("u").agg(F.sum("w").alias("outw"))
     e = (
         sym.join(outw, "u")

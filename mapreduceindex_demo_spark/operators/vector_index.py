@@ -107,44 +107,51 @@ class IVFVectorIndex:
         from mapreduceindex_demo_spark.sources import hadoopfs
 
         cells_path = f"{self.path}/cells"
-        changes = changes.localCheckpoint(eager=False)
-        changed = changes.select("vec_id").distinct()
-        upserts = changes.where(F.lower(F.col(op_col)) == "upsert").select(
-            "vec_id", "ee"
-        )
-        new_assign = S.assign_cells(upserts, self.centroids())
+        # the batch feeds the affected-cell collect and the rewrite:
+        # persisted and counted once, released when the call ends, failed
+        # or not (the map index's batch rule, mapindex.py:_cdc_batch)
+        changes = changes.persist()
+        try:
+            changes.count()
+            changed = changes.select("vec_id").distinct()
+            upserts = changes.where(F.lower(F.col(op_col)) == "upsert").select(
+                "vec_id", "ee"
+            )
+            new_assign = S.assign_cells(upserts, self.centroids())
 
-        # Affected-cell id list: driver-side METADATA, ≤k small ints
-        # regardless of batch or index size (same justification as the
-        # mapindex affected-bucket list, mapindex.py:apply_changes_durable).
-        # no broadcast hints on `changed`: it grows with the batch, and a
-        # hint can never be demoted by AQE (the round-6 broadcast policy —
-        # AQE broadcasts small batches from measured runtime bytes and
-        # degrades to shuffle exactly when a backfill batch outgrows it)
-        cur = self.cells()
-        old_cells = cur.join(changed, "vec_id").select("cid").distinct()
-        new_cells = new_assign.select("cid").distinct()
-        affected = sorted(
-            int(r["cid"]) for r in old_cells.union(new_cells).distinct().collect()
-        )
-        if not affected:
-            return
+            # Affected-cell id list: driver-side METADATA, ≤k small ints
+            # regardless of batch or index size (same justification as the
+            # mapindex affected-bucket list, mapindex.py:apply_changes_durable).
+            # no broadcast hints on `changed`: it grows with the batch, and a
+            # hint can never be demoted by AQE (the round-6 broadcast policy —
+            # AQE broadcasts small batches from measured runtime bytes and
+            # degrades to shuffle exactly when a backfill batch outgrows it)
+            cur = self.cells()
+            old_cells = cur.join(changed, "vec_id").select("cid").distinct()
+            new_cells = new_assign.select("cid").distinct()
+            affected = sorted(
+                int(r["cid"]) for r in old_cells.union(new_cells).distinct().collect()
+            )
+            if not affected:
+                return
 
-        merged = (
-            cur.filter(F.col("cid").isin(affected))
-            .join(changed, "vec_id", "left_anti")
-            .unionByName(new_assign)
-        )
-        hadoopfs.dynamic_overwrite_dropping_emptied(
-            self.spark,
-            merged.repartition(len(affected), F.col("cid")).sortWithinPartitions(
-                "cid", "vec_id"
-            ),
-            cells_path,
-            "cid",
-            lambda c: hadoopfs.join(cells_path, f"cid={int(c)}"),
-            affected,
-        )
+            merged = (
+                cur.filter(F.col("cid").isin(affected))
+                .join(changed, "vec_id", "left_anti")
+                .unionByName(new_assign)
+            )
+            hadoopfs.dynamic_overwrite_dropping_emptied(
+                self.spark,
+                merged.repartition(len(affected), F.col("cid")).sortWithinPartitions(
+                    "cid", "vec_id"
+                ),
+                cells_path,
+                "cid",
+                lambda c: hadoopfs.join(cells_path, f"cid={int(c)}"),
+                affected,
+            )
+        finally:
+            changes.unpersist()
 
     # -- query -------------------------------------------------------------
 

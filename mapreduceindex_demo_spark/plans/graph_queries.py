@@ -22,10 +22,14 @@ value-hash parity check is exact (no float summation order anywhere).
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceindex_demo_spark.operators.graph import pagerank, triangle_stats
+from mapreduceindex_demo_spark.operators.graph import (
+    pagerank,
+    symmetrize,
+    triangle_stats,
+)
 from mapreduceindex_demo_spark.plans.registry import query
 from mapreduceindex_demo_spark.session import load_table
 
@@ -33,6 +37,36 @@ _PR_ITERS = 5
 _PR_DAMP = 85  # percent
 _PR_SCALE = 10**12
 _PR_TOPK = 10
+
+
+def _trade_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem ⋈ orders — one row per line item with its customer
+    (``o_custkey``) and supplier (``l_suppkey``): the edge source of
+    every trade-graph query."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return li.join(orders, li.l_orderkey == orders.o_orderkey)
+
+
+# The integer trade-graph node codec (r16): in flight a customer k is node
+# 2k and a supplier k is node 2k+1, a bijection with the oracles'
+# 'c…'/'s…' strings. Integer keys halve the shuffled key bytes and hash as
+# longs; fixed points and counts are invariant under the relabeling, and
+# the strings are decoded on |V|-row frames BEFORE any order-by, so string
+# tie-breaks are unchanged.
+def _trade_ids() -> tuple[Column, Column]:
+    """(customer node, supplier node) over :func:`_trade_lines` rows."""
+    return F.col("o_custkey") * 2, F.col("l_suppkey") * 2 + 1
+
+
+def _trade_name(side: str | None = None) -> Column:
+    """Integer column ``node`` decoded to its 'c…'/'s…' string; ``side``
+    ('c' or 's') skips the parity test when every node is on one side."""
+    cust = F.concat(F.lit("c"), F.expr("node div 2").cast("string"))
+    supp = F.concat(F.lit("s"), F.expr("(node - 1) div 2").cast("string"))
+    if side is not None:
+        return cust if side == "c" else supp
+    return F.when(F.col("node") % 2 == 0, cust).otherwise(supp)
 
 
 def _pr_power_steps() -> tuple[str, str]:
@@ -184,32 +218,21 @@ def q_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism is |V| hash partitions per round, the GraphX/Pregel
     communication pattern on DataFrames. r16 optimization (measured
     6.5 s → 4.1 s at sf0.1, identical rows): nodes ride the five rounds
-    as INTEGER ids (customer 2k, supplier 2k+1 — the k-core relabeling
-    argument: the all-integer fixed point is invariant under the
-    bijection) and the contract's 'c…'/'s…' strings are reconstructed on
-    the |V|-row rank frame BEFORE the top-k order-by, so the
-    (rank DESC, node string ASC) tie-break is exactly the pre-r16 one."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    as INTEGER ids (``_trade_ids``) and the contract's 'c…'/'s…' strings
+    are reconstructed on the |V|-row rank frame BEFORE the top-k
+    order-by, so the (rank DESC, node string ASC) tie-break is exactly
+    the pre-r16 one."""
+    cust, supp = _trade_ids()
     edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
+        _trade_lines(spark, sf_dir)
+        .groupBy(cust.alias("src"), supp.alias("dst"))
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
     ranks = pagerank(
         edges, iters=_PR_ITERS, damping_pct=_PR_DAMP, scale=_PR_SCALE
     )
-    nodestr = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.expr("node div 2").cast("string")),
-    ).otherwise(
-        F.concat(F.lit("s"), F.expr("(node - 1) div 2").cast("string"))
-    )
     return (
-        ranks.select(nodestr.alias("node"), "rank_e12")
+        ranks.select(_trade_name().alias("node"), "rank_e12")
         .orderBy(F.desc("rank_e12"), F.asc("node"))
         .limit(_PR_TOPK)
         .select(
@@ -295,15 +318,12 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled rounds; the monotone edge-set shrinkage makes the round
     trajectory a fixpoint certificate (equal last rows == converged,
     asserted at every test SF). Node identity (r16 optimization): the
-    engine keys nodes as INTEGERS — customer 2k, supplier 2k+1, a
-    bijection with the oracle's 'c…'/'s…' strings — because the served
+    engine keys nodes as INTEGERS (``_trade_ids``) because the served
     rows are per-round COUNTS only, and counts are invariant under any
     relabeling (the peel trajectory depends on the degree function, not
-    on names). Integer keys halve the shuffled key bytes and replace
-    string hashing/comparison with long hashing in every round's
-    groupBy and semi-joins: measured 8.7 s → 4.5 s per execution at
-    sf0.1 (interleaved A/B, identical rows). The oracle deliberately
-    keeps the string spelling — it is the naive-contract side.
+    on names): measured 8.7 s → 4.5 s per execution at sf0.1
+    (interleaved A/B, identical rows). The oracle deliberately keeps the
+    string spelling — it is the naive-contract side.
 
     Scale shape: edge derivation is one fact-table join + DISTINCT
     (map-side combined); each peel round is one degree groupBy (combiner
@@ -319,16 +339,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY §2.2 — its only loop is the per-document map pipeline); like
     components/PageRank/triangles this is engine-completeness work
     beyond the reference surface."""
-    from pyspark import StorageLevel
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    cust, supp = _trade_ids()
     raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
+        _trade_lines(spark, sf_dir)
+        .select(cust.alias("u"), supp.alias("v"))
         .distinct()
     )
     # no distinct after symmetrizing: raw is already distinct and every
@@ -337,23 +351,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argument the 'c'/'s' prefixes used to carry) — a distinct here
     # would be a no-op costing one full exchange over 2|E| rows (r13b
     # review finding; the oracle's e0 is UNION ALL for the same reason).
-    # r17: symmetrize with a ONE-pass explode — the union spelling
-    # instantiated raw's fact-table join + distinct once per branch
-    # inside this persist's fill (the connected_components finding).
-    edges = (
-        raw.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(
-                        F.col("v").alias("u"), F.col("u").alias("v")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .persist(StorageLevel.MEMORY_ONLY)
-    )
+    edges = symmetrize(raw, "u", "v").persist(StorageLevel.MEMORY_ONLY)
 
     # r17: per-round stats come from a degree table (one groupBy over the
     # round's CACHED edge set) instead of a separate countDistinct over
@@ -506,12 +504,13 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: the reference engine has no iterative operator
     (SURVEY §2.2); like the other four graph operators this is
     engine-completeness work beyond the reference surface."""
-    from pyspark import StorageLevel
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # STRING node ids, not the integer codec of the other trade-graph
+    # queries: the plurality tie-break (count DESC, label ASC) orders
+    # labels as strings, and the integer ids order differently
+    # ('c10' < 'c9', 20 > 18), so relabeling would change the served
+    # communities.
     raw = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        _trade_lines(spark, sf_dir)
         .select(
             F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("u"),
             F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("v"),
@@ -520,22 +519,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # symmetrize without distinct: the 'c'/'s' prefixes make
     # cross-duplicates impossible (the k-core r13b review finding).
-    # r17: one-pass explode symmetrize — the union spelling evaluated
-    # raw's fact join + distinct twice inside this persist's fill.
-    edges = (
-        raw.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(
-                        F.col("v").alias("u"), F.col("u").alias("v")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .persist(StorageLevel.MEMORY_ONLY)
-    )
+    edges = symmetrize(raw, "u", "v").persist(StorageLevel.MEMORY_ONLY)
     labels = edges.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -824,11 +808,10 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combined SUM, the renormalization a 1-row broadcast;
     nothing collects to the driver. Five rounds = 10 such steps.
     r16 optimization (measured 7.9 s → 4.8 s at sf0.1, identical rows):
-    (a) nodes are INTEGER ids in flight — customer 2k, supplier 2k+1,
-    the k-core relabeling argument: the fixed point is invariant under
-    the bijection, and the 'c…'/'s…' strings the contract serves are
-    reconstructed on the |V|-row frames feeding the top-k (BEFORE the
-    order-by, so the string tie-break is unchanged); (b) only the
+    (a) nodes are INTEGER ids in flight (``_trade_ids``), the 'c…'/'s…'
+    strings the contract serves reconstructed on the |V|-row frames
+    feeding the top-k (BEFORE the order-by, so the string tie-break is
+    unchanged); (b) only the
     authority half-step eagerly checkpoints — the hub half-step
     PERSISTs instead (its two readers, the L1-norm aggregate and the
     renormalize join, share one cached materialization) and the next
@@ -840,18 +823,10 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     link-analysis pair (PageRank global centrality / HITS topic-style
     hub-authority duality) on the same trade graph so the two rankings
     are directly comparable."""
-    from pyspark import StorageLevel
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cust, supp = _trade_ids()
     e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
+        _trade_lines(spark, sf_dir)
+        .groupBy(cust.alias("u"), supp.alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
         .localCheckpoint(eager=True)
     )
@@ -899,17 +874,15 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # per-side TakeOrdered top-k (never a global single-partition window
     # over |V| rows), then one 20-row union for the serve. The contract's
-    # 'c…'/'s…' node strings are reconstructed from the integer ids HERE,
-    # on the |V|-row frames BEFORE the order-by, so the (score DESC, node
-    # string ASC) tie-break is exactly the pre-r16 one (authority nodes
-    # are always odd/supplier, hub nodes always even/customer — the
-    # update directions guarantee it).
+    # node strings are decoded from the integer ids HERE, on the |V|-row
+    # frames BEFORE the order-by, so the (score DESC, node string ASC)
+    # tie-break is exactly the pre-r16 one (authority nodes are always
+    # suppliers, hub nodes always customers — the update directions
+    # guarantee it).
     top_a = (
         a.select(
             F.lit("auth").alias("side"),
-            F.concat(
-                F.lit("s"), F.expr("(node - 1) div 2").cast("string")
-            ).alias("node"),
+            _trade_name("s").alias("node"),
             F.col("a").alias("score_e6"),
         )
         .orderBy(F.desc("score_e6"), F.asc("node"))
@@ -918,9 +891,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_h = (
         h.select(
             F.lit("hub").alias("side"),
-            F.concat(
-                F.lit("c"), F.expr("node div 2").cast("string")
-            ).alias("node"),
+            _trade_name("c").alias("node"),
             F.col("h").alias("score_e6"),
         )
         .orderBy(F.desc("score_e6"), F.asc("node"))

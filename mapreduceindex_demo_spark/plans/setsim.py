@@ -415,7 +415,9 @@ def q_er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
-    nb = _snm_neighbor_pairs(c, F.col("c_name")).select(
+    nb = _snm_neighbor_pairs(
+        c.withColumn("skey", F.col("c_name")), ["c_nationkey"]
+    ).select(
         "c_nationkey", F.col("a_name").alias("c_name"), F.col("b_name").alias("nbr")
     )
     m = nb.groupBy("c_nationkey").agg(
@@ -449,147 +451,36 @@ def q_er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _snm_neighbor_pairs_multi(c: DataFrame, skeys) -> DataFrame:
-    """ALL passes' sorted-neighborhood comparison pairs in ONE
-    rank/chunk/copy kernel instance (r16 optimization): the pass list
-    ``skeys`` is exploded into (pass_id, skey) rows — one corpus scan,
-    3× rows — and every window/aggregate of the single-pass kernel
-    ([q:er_sorted_neighborhood] steps 1-3) runs with ``pass_id``
-    PREPENDED to its partition keys, so the passes stay mathematically
-    independent (each (pass_id, nation) slice is exactly the single-pass
-    kernel on that slice — pair-identical by the same r9 proof) while
-    the PLAN pays one set of stages instead of |passes| separate
-    subtrees. Measured (interleaved A/B at sf0.1, 3×3-rep medians):
-    er_snm_multipass counted 0.85 → 0.55 s (−35%), forced 1.07 → 0.81 s
-    (−25%) — at this scale the kernel's ~6 stages are constants-bound,
-    so one instance on 3× rows beats three instances on 1× rows; at
-    100 TB the fusion also removes two corpus scans and two full window
-    cascades. Returns ``(pass_id, c_nationkey, a_name, a_key, b_name,
-    b_key)``; ``ranked`` is persisted once for the native+copy readers
-    (MEMORY_ONLY: evictable, never unpersisted — the triangle rule).
-    The offsets join keeps the round-12 UN-hinted safety valve; its
-    frame is now |passes|·|buckets| rows — still metadata-sized."""
-    b = c.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.posexplode(F.array(*skeys)).alias("pass_id", "skey"),
-    ).withColumn("bkt", F.substring(F.col("skey"), 1, _SNM_PFX))
-    w1 = Window.partitionBy("pass_id", "c_nationkey", "bkt").orderBy(
-        "skey", "c_custkey"
-    )
-    local = b.withColumn("rn", F.row_number().over(w1))
-    cnts = b.groupBy("pass_id", "c_nationkey", "bkt").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    wo = (
-        Window.partitionBy("pass_id", "c_nationkey")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = cnts.select(
-        "pass_id",
-        "c_nationkey",
-        "bkt",
-        F.coalesce(F.sum("cnt").over(wo), F.lit(0)).alias("off"),
-    )
-    ranked = (
-        local.join(offs, ["pass_id", "c_nationkey", "bkt"])
-        .select(
-            "pass_id",
-            "c_nationkey",
-            "c_name",
-            "c_custkey",
-            (F.col("off") + F.col("rn")).alias("rnk"),
-        )
-        .persist(StorageLevel.MEMORY_ONLY)
-    )
-    chunk = F.floor((F.col("rnk") - 1) / _SNM_CHUNK)
-    natives = ranked.select(
-        "pass_id",
-        "c_nationkey",
-        chunk.alias("chunk"),
-        "rnk",
-        "c_name",
-        "c_custkey",
-        F.lit(False).alias("is_copy"),
-    )
-    copies = ranked.where(
-        (F.col("rnk") - 1) % _SNM_CHUNK >= _SNM_CHUNK - _SNM_W
-    ).select(
-        "pass_id",
-        "c_nationkey",
-        (chunk + 1).alias("chunk"),
-        "rnk",
-        "c_name",
-        "c_custkey",
-        F.lit(True).alias("is_copy"),
-    )
-    u = natives.unionByName(copies)
-    w3 = Window.partitionBy("pass_id", "c_nationkey", "chunk").orderBy("rnk")
-    leads = u.select(
-        "pass_id",
-        "c_nationkey",
-        "c_name",
-        "c_custkey",
-        *[
-            F.lead(F.struct("c_name", "c_custkey", "is_copy"), i)
-            .over(w3)
-            .alias(f"n{i}")
-            for i in range(1, _SNM_W + 1)
-        ],
-    )
-    return (
-        leads.select(
-            "pass_id",
-            "c_nationkey",
-            "c_name",
-            "c_custkey",
-            F.explode(
-                F.array(*[F.col(f"n{i}") for i in range(1, _SNM_W + 1)])
-            ).alias("nbr_s"),
-        )
-        .where(F.col("nbr_s").isNotNull() & ~F.col("nbr_s.is_copy"))
-        .select(
-            "pass_id",
-            "c_nationkey",
-            F.col("c_name").alias("a_name"),
-            F.col("c_custkey").alias("a_key"),
-            F.col("nbr_s.c_name").alias("b_name"),
-            F.col("nbr_s.c_custkey").alias("b_key"),
-        )
-    )
-
-
-def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
-    """Every sorted-neighborhood comparison pair under the sort key
-    expression ``skey`` — the distributed rank/chunk/copy scheme of
-    [q:er_sorted_neighborhood] (steps 1-3 of its docstring), factored out
-    (round 10) so the multi-pass variant re-runs it under an independent
-    key. Returns ``(c_nationkey, a_name, a_key, b_name, b_key)``: record
-    ids ride along so multi-pass union can dedup PAIRS, not name strings.
-    Pair-identical to the naive single window per block (the r9
-    hypothesis-fuzzed proof); each unordered pair appears exactly once
-    per pass (a record meets each of its next-w neighbors once)."""
-    # (1) exact per-nation global rank, distributed: local rank within the
+def _snm_neighbor_pairs(b: DataFrame, block: list[str]) -> DataFrame:
+    """Every sorted-neighborhood comparison pair of ``b`` — the
+    distributed rank/chunk/copy scheme of [q:er_sorted_neighborhood]
+    (steps 1-3 of its docstring). ``b`` carries the sort key as column
+    ``skey`` next to ``c_custkey``/``c_name``, and every window and
+    aggregate partitions by the ``block`` columns: ``["c_nationkey"]``
+    for the single pass, ``["pass_id", "c_nationkey"]`` for the fused
+    passes of [q:er_snm_multipass], whose (pass_id, nation) slices are
+    each exactly the single pass on that slice. The block columns are an
+    argument, not a pass_id every caller carries, so the single pass's
+    exchanges stay keyed on (nation, bucket) and (nation, chunk) alone.
+    Returns ``(*block,
+    a_name, a_key, b_name, b_key)``: record ids ride along so the
+    multi-pass union can dedup PAIRS, not name strings. Pair-identical to
+    the naive single window per block (the r9 hypothesis-fuzzed proof);
+    each unordered pair appears exactly once per block (a record meets
+    each of its next-w neighbors once)."""
+    # (1) exact per-block global rank, distributed: local rank within the
     # contiguous prefix bucket + broadcast cumulative bucket offsets
-    b = c.withColumn("skey", skey).withColumn(
-        "bkt", F.substring(F.col("skey"), 1, _SNM_PFX)
-    )
-    w1 = Window.partitionBy("c_nationkey", "bkt").orderBy(
-        "skey", "c_custkey"
-    )
+    b = b.withColumn("bkt", F.substring(F.col("skey"), 1, _SNM_PFX))
+    w1 = Window.partitionBy(*block, "bkt").orderBy("skey", "c_custkey")
     local = b.withColumn("rn", F.row_number().over(w1))
-    cnts = b.groupBy("c_nationkey", "bkt").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    # the offset window runs over the TINY per-bucket count table (25 x
-    # |prefixes| rows), not the data — a metadata-sized single exchange.
-    # CAVEAT (round 10): "metadata-sized" holds only while |distinct
-    # prefix buckets| stays small relative to n. With zero-padded
-    # sequential keys like 'Customer#%09d' a 16-char prefix admits ~100
-    # rows per bucket, so bucket count grows ~n/100 — and under a
-    # degenerate key (e.g. the reversed-name pass of
+    cnts = b.groupBy(*block, "bkt").agg(F.count(F.lit(1)).alias("cnt"))
+    # the offset window runs over the TINY per-bucket count table
+    # (|blocks| x |prefixes| rows), not the data — a metadata-sized single
+    # exchange. CAVEAT (round 10): "metadata-sized" holds only while
+    # |distinct prefix buckets| stays small relative to n. With
+    # zero-padded sequential keys like 'Customer#%09d' a 16-char prefix
+    # admits ~100 rows per bucket, so bucket count grows ~n/100 — and
+    # under a degenerate key (e.g. the reversed-name pass of
     # [q:er_snm_multipass] on near-unique suffixes) ~1 row per bucket,
     # so offs grows ~n. `_SNM_PFX` is the tuning knob: COARSEN it
     # (shorter prefix => fewer, larger buckets) so |buckets| stays
@@ -608,19 +499,19 @@ def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
     # byte counts when a bad prefix makes offs grow with n — the plan
     # degrades to one extra exchange instead of a driver OOM.
     wo = (
-        Window.partitionBy("c_nationkey")
+        Window.partitionBy(*block)
         .orderBy("bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offs = cnts.select(
-        "c_nationkey",
+        *block,
         "bkt",
         F.coalesce(F.sum("cnt").over(wo), F.lit(0)).alias("off"),
     )
     ranked = (
-        local.join(offs, ["c_nationkey", "bkt"])
+        local.join(offs, [*block, "bkt"])
         .select(
-            "c_nationkey",
+            *block,
             "c_name",
             "c_custkey",
             (F.col("off") + F.col("rn")).alias("rnk"),
@@ -633,7 +524,7 @@ def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
     # (2) chunks + one-hop boundary copies
     chunk = F.floor((F.col("rnk") - 1) / _SNM_CHUNK)
     natives = ranked.select(
-        "c_nationkey",
+        *block,
         chunk.alias("chunk"),
         "rnk",
         "c_name",
@@ -643,7 +534,7 @@ def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
     copies = ranked.where(
         (F.col("rnk") - 1) % _SNM_CHUNK >= _SNM_CHUNK - _SNM_W
     ).select(
-        "c_nationkey",
+        *block,
         (chunk + 1).alias("chunk"),
         "rnk",
         "c_name",
@@ -655,9 +546,9 @@ def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
     # the native-lead emit rule needs no rejoin. Lead columns materialize
     # in a select BEFORE the explode (Spark rejects window fns in
     # generator args).
-    w3 = Window.partitionBy("c_nationkey", "chunk").orderBy("rnk")
+    w3 = Window.partitionBy(*block, "chunk").orderBy("rnk")
     leads = u.select(
-        "c_nationkey",
+        *block,
         "c_name",
         "c_custkey",
         *[
@@ -669,7 +560,7 @@ def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
     )
     return (
         leads.select(
-            "c_nationkey",
+            *block,
             "c_name",
             "c_custkey",
             F.explode(
@@ -678,7 +569,7 @@ def _snm_neighbor_pairs(c: DataFrame, skey) -> DataFrame:
         )
         .where(F.col("nbr_s").isNotNull() & ~F.col("nbr_s.is_copy"))
         .select(
-            "c_nationkey",
+            *block,
             F.col("c_name").alias("a_name"),
             F.col("c_custkey").alias("a_key"),
             F.col("nbr_s.c_name").alias("b_name"),
@@ -823,21 +714,24 @@ def q_er_snm_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     |p1 U p2|) — the measurable recall each key buys.
 
     All passes run the distributed rank/chunk/copy scheme
-    ([q:er_sorted_neighborhood] steps 1-3) through ONE fused kernel
-    instance (``_snm_neighbor_pairs_multi``, r16): the three sort keys
-    explode into (pass_id, skey) rows and every kernel window/aggregate
-    partitions by pass_id first, so each pass slice is exactly the
-    single-pass kernel on its slice — provably pair-identical to its
-    naive single window — hence the oracle IS the naive three-window
-    SQL, the same lossless-rewrite contract as the single-pass query.
-    Pairs carry record ids (not names) so the cross-pass union dedups
-    entity pairs even under duplicate name strings.
+    ([q:er_sorted_neighborhood] steps 1-3) through ONE fused instance of
+    its kernel (``_snm_neighbor_pairs``, r16): the three sort keys
+    explode into (pass_id, skey) rows and the kernel's block columns are
+    (pass_id, nation), so each pass slice is exactly the single-pass
+    kernel on its slice — provably pair-identical to its naive single
+    window — hence the oracle IS the naive three-window SQL, the same
+    lossless-rewrite contract as the single-pass query. Pairs carry
+    record ids (not names) so the cross-pass union dedups entity pairs
+    even under duplicate name strings.
 
-    Scale shape: ONE corpus scan and one set of kernel stages over
-    3× rows (pre-r16: three separate single-pass subtrees — measured
-    −35% counted / −25% forced at sf0.1, where the kernel's stages are
-    constants-bound; at scale the fusion removes two corpus scans and
-    two window cascades outright), plus distincts over MATCHED pairs
+    Scale shape: one set of kernel stages over 3× rows (pre-r16: three
+    separate single-pass subtrees — measured −35% counted / −25% forced
+    at sf0.1, where the kernel's stages are constants-bound; at scale
+    the fusion removes two window cascades outright). The customer table
+    is still scanned three times — by the rank window and the
+    bucket-count aggregate inside the kernel, and by the per-nation
+    record count; the executed plan at sf0.01 holds three
+    ``FileScan parquet`` customer nodes. Plus distincts over MATCHED pairs
     only (sparse — bounded by true duplicates, not by n*w comparisons)
     and per-nation aggregates; the persists are the fused match-pair
     frame and the rank frame — duplicate-sized and corpus-row-sized
@@ -849,12 +743,18 @@ def q_er_snm_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # all three passes through ONE fused kernel instance (r16
-    # optimization — see _snm_neighbor_pairs_multi: pass_id-partitioned,
-    # pair-identical per pass, one set of stages on 3× rows instead of
-    # three subtrees; measured −35% counted / −25% forced at sf0.1)
-    nb = _snm_neighbor_pairs_multi(
-        c,
-        [F.col("c_name"), F.reverse(F.col("c_name")), _snm_acct_skey()],
+    # optimization: pass_id-partitioned, pair-identical per pass, one set
+    # of stages on 3× rows instead of three subtrees; measured −35%
+    # counted / −25% forced at sf0.1)
+    skeys = [F.col("c_name"), F.reverse(F.col("c_name")), _snm_acct_skey()]
+    nb = _snm_neighbor_pairs(
+        c.select(
+            "c_custkey",
+            "c_name",
+            "c_nationkey",
+            F.posexplode(F.array(*skeys)).alias("pass_id", "skey"),
+        ),
+        ["pass_id", "c_nationkey"],
     )
     # the fused matched-pair frame feeds every per-pass count AND the
     # union-distincts — persist the sparse frame so the whole fused

@@ -220,3 +220,25 @@ def test_durable_apply_reads_batch_once_and_releases_it(spark, tmp_path):
     assert seen.value == len(BATCH)
     state = sorted(tuple(r) for r in eng.index_table("evd").collect())
     assert [r for r in state if r[2] in (1, 2, 4, 40)] == [("b", 7, 1), ("d", 6, 40)]
+
+
+def test_durable_apply_fills_batch_with_its_bucket_collect(spark, tmp_path):
+    """On the durable path the affected-bucket collect is the first job
+    over the persisted batch and fills it: no separate count runs. One
+    apply of BATCH runs 7 Spark jobs (AQE runs each query stage of the
+    collect and of the partition rewrite as a job of its own); a count
+    ahead of the collect made it 8."""
+    eng = MapIndexEngine(spark)
+    rows = [(i, "abc"[i % 3], i % 5, "upsert", 0) for i in range(1, 31)]
+    eng.create_index(
+        IndexDefn(name="evj", bucket="t", sec_exprs=("grp", "v"), where_expr="v > 0"),
+        spark.createDataFrame(rows, SCHEMA),
+        doc_id_col="doc_id",
+    )
+    eng.save_index("evj", str(tmp_path / "evj"), buckets=4)
+    _, jobs = _jobs(
+        spark, lambda: eng.apply_changes_durable("evj", _batch(spark, BATCH), **APPLY)
+    )
+    assert jobs == 7
+    state = sorted(tuple(r) for r in eng.index_table("evj").collect())
+    assert [r for r in state if r[2] in (1, 2, 4, 40)] == [("b", 7, 1), ("d", 6, 40)]

@@ -516,8 +516,9 @@ def test_durable_minmax_view_retraction_safe(spark, built):
 
 def test_in_memory_minmax_view_on_durable_index(spark, tmp_path):
     """An IN-MEMORY min/max reduce view on a durable index keeps its
-    extremes: after apply_changes_durable and after load_index it equals
-    a fresh aggregation of the index state."""
+    extremes: after apply_changes_durable, after load_index and after a
+    rebucket it equals a fresh aggregation of the index state, and the
+    rebucket leaves no RDD persisted behind."""
     eng = MapIndexEngine(spark)
     src = _docs(spark, [("a", 1, 3.0), ("b", 1, 5.0)])
     eng.create_index(_defn(name="idx_mm"), src, doc_id_col="doc_id")
@@ -543,3 +544,10 @@ def test_in_memory_minmax_view_on_durable_index(spark, tmp_path):
     assert _sorted_rows(eng.reduce_view_table("mm")) == rebuild() == [(1, 3, 3.0, 5.0)]
     eng.load_index(path)
     assert _sorted_rows(eng.reduce_view_table("mm")) == rebuild()
+
+    # the rebucket deletes the old layout's files, which the view read
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    eng.rebucket_index("idx_mm", 3)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert _sorted_rows(eng.reduce_view_table("mm")) == rebuild() == [(1, 3, 3.0, 5.0)]

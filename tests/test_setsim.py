@@ -616,3 +616,51 @@ def test_acct_key_spark_duckdb_python_spellings_agree(spark):
     expect = [_py_acct_key(v) for v in vals]
     assert got_spark == expect
     assert got_duck == expect
+
+
+def test_snm_fused_passes_equal_single_passes(spark, monkeypatch):
+    """The fused passes of [q:er_snm_multipass] are independent: on a
+    small hand-made customer frame, pass k of the (pass_id, nation)
+    kernel returns exactly the pairs of the (nation) kernel run under
+    sort key k. Chunk size 4 and 2-char rank buckets put chunk copies and
+    bucket offsets inside every pass."""
+    from pyspark.sql import functions as F
+
+    import mapreduceindex_demo_spark.plans.setsim as ss
+
+    monkeypatch.setattr(ss, "_SNM_CHUNK", 4)
+    monkeypatch.setattr(ss, "_SNM_PFX", 2)
+    names = [
+        "smith", "smyth", "jones", "jonas", "brown", "braun", "lee", "li",
+        "kim", "kin", "park", "parks", "doe", "roe", "moe", "smit",
+    ]
+    rows = [
+        (i + 1, names[i % len(names)] + "abc"[i % 3], (i * 37) % 11 - 3.5, i % 2)
+        for i in range(2 * len(names))
+    ]
+    c = spark.createDataFrame(
+        rows, "c_custkey bigint, c_name string, c_acctbal double, c_nationkey bigint"
+    )
+    skeys = [F.col("c_name"), F.reverse(F.col("c_name")), ss._snm_acct_skey()]
+    fused = ss._snm_neighbor_pairs(
+        c.select(
+            "c_custkey",
+            "c_name",
+            "c_nationkey",
+            F.posexplode(F.array(*skeys)).alias("pass_id", "skey"),
+        ),
+        ["pass_id", "c_nationkey"],
+    ).collect()
+    per_pass = []
+    for k, skey in enumerate(skeys):
+        single = ss._snm_neighbor_pairs(
+            c.withColumn("skey", skey), ["c_nationkey"]
+        ).collect()
+        want = sorted(tuple(r) for r in single)
+        got = sorted(tuple(r)[1:] for r in fused if r.pass_id == k)
+        assert got == want, k
+        # w neighbours per record minus the block tails, per nation
+        assert len(got) == 2 * (3 * 16 - 6)
+        per_pass.append({(r[0], min(r[2], r[4]), max(r[2], r[4])) for r in got})
+    # the sort keys really differ, so the equalities above are per pass
+    assert per_pass[0] != per_pass[1] != per_pass[2] != per_pass[0]

@@ -168,3 +168,36 @@ def test_probe_batch_matches_per_query_probes(spark, corpus):
             for rk, r in enumerate(single, start=1):
                 expected.add((qid, r["vec_id"], r["cos_sim"], rk))
         assert got == expected
+
+
+def test_apply_changes_releases_its_batch(spark, corpus):
+    """apply_changes persists its batch only for the call: no RDD id is
+    left in getPersistentRDDs() afterwards, and the maintained layout
+    equals a re-assignment of the surviving vectors."""
+    jsc = spark.sparkContext._jsc
+    first = corpus.where(F.col("vec_id") <= 40)
+    with tempfile.TemporaryDirectory(prefix="mrix_vidx_") as path:
+        idx = IVFVectorIndex.build(first, path, k=4, iters=1)
+        changes = (
+            corpus.where(F.col("vec_id").between(41, 60))
+            .withColumn("op", F.lit("upsert"))
+            .unionByName(
+                first.where(F.col("vec_id").isin(5, 6)).withColumn(
+                    "op", F.lit("delete")
+                )
+            )
+        )
+        before = set(jsc.getPersistentRDDs().keySet())
+        idx.apply_changes(changes)
+        # compared by id: the context cleaner may release older RDDs meanwhile
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+        survivors = corpus.where(
+            (F.col("vec_id") <= 60) & ~F.col("vec_id").isin(5, 6)
+        )
+        expected = {
+            (r["vec_id"], int(r["cid"]))
+            for r in S.assign_cells(survivors, idx.centroids())
+            .select("vec_id", "cid")
+            .collect()
+        }
+        assert _state(idx) == expected
