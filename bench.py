@@ -1,8 +1,11 @@
 """Benchmark runner: times the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Each query is timed cold, the median of three calls through perfbench's
+cold call (``perfbench.query_suite._call``), after one untimed pass.
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+   "jobs": {...}, "legacy_total": N, "sf": ...}
 """
 
 from __future__ import annotations
@@ -12,9 +15,10 @@ import os
 import sys
 import time
 
-from mapreduceindex_demo_spark.oracle_harness import spark_forced_expr
 from mapreduceindex_demo_spark.plans import QUERIES
 from mapreduceindex_demo_spark.session import get_spark
+from perfbench.common import Tracer, clear_caches, median
+from perfbench.query_suite import _call
 
 # Contention sentinel: median probe time on a QUIET machine, committed as
 # the reference. The probe is a fixed scheduling-bound job (range.count is
@@ -27,20 +31,24 @@ _PROBE_REF_SEC = 0.13  # calibrated: quiet-machine medians 0.09-0.145s
 #: cool-down between them — transient co-running work usually drains fast
 _MAX_ATTEMPTS = 2
 _RETRY_COOLDOWN_SEC = 30
+#: cold calls timed per query; the figure is their median
+_REPS = 3
 
 #: the 15 r6-era headline queries — FROZEN: every BENCH_r03..r09 total is
-#: over exactly this set, so `legacy_total`/`legacy_forced_total` keep the
-#: cross-round series comparable. Round 10 adds modern operators (the
-#: r7-r9 classes the round-over-round tracking was blind to — r9 verdict
-#: "What's missing #4") to the bench flags; those join `queries`/
-#: `forced_queries` and the GRAND totals (`value`/`forced_total`), which
-#: therefore step up at r10. Round 13 adds the two SNM queries and the
-#: ahash APPLY ledger (r12 verdict item 3) — grand totals step again.
-#: Round 14 adds the respelled anisotropy diagnostic, the fastText gate
-#: (the two adverse/borderline r13 ratios), and the k-core decomposition
-#: (the widest with-scale WIN) per r13 verdict item 3 — grand totals step
-#: once more. Compare grand totals within a flag era (r10-r12, r13,
-#: r14+), legacy totals across all rounds.
+#: over exactly this set, so `legacy_total` keeps the cross-round series
+#: comparable. Round 10 adds modern operators (the r7-r9 classes the
+#: round-over-round tracking was blind to — r9 verdict "What's missing
+#: #4") to the bench flags; those join `queries` and the GRAND total
+#: (`value`), which therefore steps up at r10. Round 13 adds the two SNM
+#: queries and the ahash APPLY ledger (r12 verdict item 3) — the grand
+#: total steps again. Round 14 adds the respelled anisotropy diagnostic,
+#: the fastText gate (the two adverse/borderline r13 ratios), and the
+#: k-core decomposition (the widest with-scale WIN) per r13 verdict item
+#: 3 — the grand total steps once more. Compare grand totals within a flag
+#: era (r10-r12, r13, r14+), legacy totals across all rounds. Cold timing
+#: is an era break for BOTH totals: earlier artifacts took the median of
+#: three reps of which two ran warm on what the first persisted, and
+#: timed a prunable `.count()`; compare cold artifacts only with cold ones.
 _LEGACY_15 = frozenset(
     {
         "mapreduce_wordcount",
@@ -75,72 +83,46 @@ def _probe(spark, reps: int = 5) -> float:
 
 
 def _measure(spark, bench_queries, sf_dir: str, sf: float) -> dict:
-    """One full timing pass; returns the artifact dict (incl. noisy flag)."""
-    # Warm-up: run every bench query once AT THE TARGET SF so whole-stage
-    # codegen/JIT is compiled, table schemas are resolved (plan cache), and
-    # the OS page cache holds the parquet files before timing. Timed runs
-    # then measure steady-state execution — the same warm-engine condition
-    # BASELINE.md's DuckDB numbers were captured under.
-    warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", sf_dir)
-    for q in bench_queries.values():
-        q.fn(spark, warm_dir).count()
-    # The sentinel probes bracket the TIMED region (round 9): probing
-    # before the warm-up measured cold-engine scheduling — a fresh
-    # session's first probe reads 0.2-0.26 s on a quiet machine (JIT/GC
-    # settling), tripping the sentinel on phantom contention. Timing
-    # starts here, so the bracket starts here.
+    """One full timing pass; returns the artifact dict (incl. noisy flag).
+
+    Every call, untimed or timed, is cold: caches are cleared and leftover
+    RDDs unpersisted first, then ``q.fn`` and one forcing action (a hash
+    over every output column) run through perfbench's call, so a figure
+    is what a caller pays, jobs run while the plan is built included."""
+    tracer = Tracer(spark, True)
+    # one untimed pass: JIT, Python workers and the OS page cache
+    for name in bench_queries:
+        clear_caches(spark)
+        _call(spark, tracer, name, sf_dir)
+    clear_caches(spark)
+    # the sentinel probes bracket the timed region
     probe_before = _probe(spark)
 
-    # Median of 3 timed runs per query: single-run local-mode numbers swing
-    # ±40% from GC/scheduler noise; the median is the steady-state figure.
-    #
-    # Two timings per query (round-6 methodology correction, BASELINE.md):
-    # - sec: `.count()` — kept for cross-round comparability, but Catalyst
-    #   prunes a FINAL projection under count, so projection-final queries
-    #   (minhash signatures, chunking) under-measure here.
-    # - forced_sec: a bit_xor(xxhash64(<all output columns>)) aggregate —
-    #   forces every output value to materialize with no driver transfer;
-    #   the honest kernel number, symmetric with timing a DuckDB aggregate
-    #   over the same oracle subquery.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     timings: dict[str, float] = {}
-    forced: dict[str, float] = {}
-    for name, q in bench_queries.items():
-        runs = []
-        n = 0
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            n = df.count()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(sorted(runs)[len(runs) // 2], 4)
-        force = spark_forced_expr(q.fn(spark, sf_dir).columns)
-        fruns = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).selectExpr(force).collect()
-            fruns.append(time.perf_counter() - t0)
-        forced[name] = round(sorted(fruns)[len(fruns) // 2], 4)
+    jobs: dict[str, int] = {}
+    for name in bench_queries:
+        runs, counters = [], []
+        for _ in range(_REPS):
+            clear_caches(spark)
+            _, _, span, _ = _call(spark, tracer, name, sf_dir)
+            runs.append(span["seconds"])
+            counters.append(span["counters"])
+        timings[name] = round(median(runs), 4)
+        c = {
+            k: int(median([r[k] for r in counters]))
+            for k in ("jobs", "stages", "tasks")
+        }
+        jobs[name] = c["jobs"]
         print(
-            f"# {name}: {timings[name]:.3f}s counted / "
-            f"{forced[name]:.3f}s forced ({n} rows)",
+            f"# {name}: {timings[name]:.3f}s cold, {c['jobs']} jobs, "
+            f"{c['stages']} stages, {c['tasks']} tasks",
             file=sys.stderr,
         )
-        # r15: drop the finished query's helper caches (persisted LM /
-        # index frames the lazy return contract can't unpersist) so
-        # later queries never time under earlier queries' memory
-        # pressure (r14 ADVICE). Medians are unaffected: rep 1 rebuilds
-        # the cache, reps 2-3 reuse it, and the median picks the
-        # steady-state pair — same property the warm-up run provided.
-        spark.catalog.clearCache()
+    clear_caches(spark)
 
     probe_after = _probe(spark)
-    # max of the two (r7 verdict): contention at EITHER end of the run can
-    # pollute timings — BENCH_r07 shipped a 1.57x-reference before-probe
-    # under a clean flag because only the after-probe was checked. The old
-    # min() rationale (suite GC inflating the after-probe shouldn't
-    # self-flag) proved theoretical: a flagged-noisy artifact is re-run on
-    # a quiet machine either way, and a falsely-clean one is worse.
+    # max of the two: contention at EITHER end of the run can pollute
+    # timings, and a falsely-clean artifact is worse than a re-run
     probe = max(probe_before, probe_after)
     noisy = probe > 1.5 * _PROBE_REF_SEC
     if noisy:
@@ -150,23 +132,15 @@ def _measure(spark, bench_queries, sf_dir: str, sf: float) -> dict:
             "include co-running-workload noise",
             file=sys.stderr,
         )
-    total = round(sum(timings.values()), 4)
     return {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "forced_queries": forced,
-        "forced_total": round(sum(forced.values()), 4),
-        # the frozen r6-era set, comparable with every BENCH_r03..r09;
-        # a renamed/un-benched legacy query must break LOUDLY, not
-        # silently shrink the cross-round series
-        "legacy_total": round(
-            sum(timings[k] for k in _LEGACY_15), 4
-        ),
-        "legacy_forced_total": round(
-            sum(forced[k] for k in _LEGACY_15), 4
-        ),
+        "jobs": jobs,
+        # the frozen r6-era set; a renamed/un-benched legacy query must
+        # break LOUDLY, not silently shrink the cross-round series
+        "legacy_total": round(sum(timings[k] for k in _LEGACY_15), 4),
         "sf": sf,
         "probe_sec": probe,
         "probe_before_sec": probe_before,

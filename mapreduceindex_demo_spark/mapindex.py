@@ -61,6 +61,25 @@ def _key_cols(n: int) -> list[str]:
     return [f"key_{i}" for i in range(n)]
 
 
+def validated_ops(changes: DataFrame, op_col: str) -> DataFrame:
+    """``changes`` with ``op_col`` lower-cased; any op but upsert, delete or
+    expiration (NULL or typo'd) must ERROR, not silently retract the doc's
+    entries. A plan-embedded raise_error: zero extra jobs."""
+    known_ops = ("upsert", "delete", "expiration")
+    return changes.withColumn(
+        op_col,
+        F.when(F.lower(F.col(op_col)).isin(*known_ops), F.lower(F.col(op_col)))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"unknown CDC op (expected one of {known_ops}): "),
+                    F.coalesce(F.col(op_col).cast("string"), F.lit("NULL")),
+                )
+            )
+        ),
+    )
+
+
 class MapIndexEngine:
     """Create/maintain/scan secondary indexes over DataFrames."""
 
@@ -935,7 +954,7 @@ class MapIndexEngine:
         yielded frames stay lazy plans over ``changes``, sharing the
         reduction's Exchange (ReuseExchange)."""
         order = [c for c in (batch_col, seq_col) if c]
-        changes = self._validated_ops(changes, op_col)
+        changes = validated_ops(changes, op_col)
         if order:
             w = Window.partitionBy(doc_id_col).orderBy(*[F.desc(c) for c in order])
             changes = (
@@ -954,24 +973,6 @@ class MapIndexEngine:
         finally:
             if commit:
                 changes.unpersist()
-
-    def _validated_ops(self, changes: DataFrame, op_col: str) -> DataFrame:
-        """ADVICE r1: a NULL/typo'd opcode must ERROR, not silently retract
-        the doc's entries. The check is a plan-embedded raise_error inside
-        the same pass (zero extra jobs) — it fires on the first bad row."""
-        known_ops = ("upsert", "delete", "expiration")
-        return changes.withColumn(
-            op_col,
-            F.when(F.lower(F.col(op_col)).isin(*known_ops), F.lower(F.col(op_col)))
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(f"unknown CDC op (expected one of {known_ops}): "),
-                        F.coalesce(F.col(op_col).cast("string"), F.lit("NULL")),
-                    )
-                )
-            ),
-        )
 
     def _delta(
         self,

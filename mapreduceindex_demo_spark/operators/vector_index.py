@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceindex_demo_spark.functions import similarity as S
+from mapreduceindex_demo_spark.mapindex import validated_ops
 
 
 class IVFVectorIndex:
@@ -109,12 +110,13 @@ class IVFVectorIndex:
         cells_path = f"{self.path}/cells"
         # the batch feeds the affected-cell collect and the rewrite:
         # persisted and counted once, released when the call ends, failed
-        # or not (the map index's batch rule, mapindex.py:_cdc_batch)
-        changes = changes.persist()
+        # or not (the map index's batch rule, mapindex.py:_cdc_batch); an
+        # unknown op fails that count before any cell is rewritten
+        changes = validated_ops(changes, op_col).persist()
         try:
             changes.count()
             changed = changes.select("vec_id").distinct()
-            upserts = changes.where(F.lower(F.col(op_col)) == "upsert").select(
+            upserts = changes.where(F.col(op_col) == "upsert").select(
                 "vec_id", "ee"
             )
             new_assign = S.assign_cells(upserts, self.centroids())

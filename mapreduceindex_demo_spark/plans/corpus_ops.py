@@ -764,13 +764,17 @@ _BPE_ORACLE = f"""
     """
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, final_seq: bool):
-    """The ONE Spark spelling of the BPE training loop, shared by the
-    merge-mining query and the apply/fertility query: returns
-    (bests, seq_final) where ``bests`` is the per-round 1-row argmax
-    frame list and ``seq_final`` the fully-rewritten word-type table —
-    built (and persisted) ONLY when ``final_seq`` is requested, since
-    the merge query has no reader for the last rewrite (r13b review)."""
+def _train_merges(
+    spark: SparkSession, sf_dir: str, argmax, rounds: int, final_seq: bool = False
+):
+    """The ONE Spark spelling of the merge-training loop, shared by the BPE
+    merge-mining and apply queries and the WordPiece trainer, which differ
+    only in ``argmax``: the word-type table → its 1-row best-pair frame
+    (a ``pair`` column plus the counts the caller serves). Returns
+    (bests, seq_final) where ``bests`` is the per-round argmax frame list
+    and ``seq_final`` the fully-rewritten word-type table — built (and
+    persisted) ONLY when ``final_seq`` is requested, since the merge
+    queries have no reader for the last rewrite (r13b review)."""
     d = _t(spark, sf_dir, "documents")
     wf = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -793,23 +797,15 @@ def _bpe_train(spark: SparkSession, sf_dir: str, final_seq: bool):
     # reader — no extra materialization job is ever scheduled.
     bests = []
     prev = None
-    for i in range(_BPE_MERGES):
-        pairs = seq.select(
-            F.explode(F.expr(spark_bigram_sql("split(seq, ' ')"))).alias("pair"),
-            "cnt",
-        )
-        rows = (
-            pairs.groupBy("pair")
-            .agg(F.sum("cnt").cast("long").alias("pc"))
-            .orderBy(F.desc("pc"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
+    for i in range(rounds):
+        frame = argmax(seq)
+        rows = frame.collect()
         if prev is not None:
             prev.unpersist()
-        best = spark.createDataFrame(rows, "pair string, pc long")
+        # a DDL schema keeps every column nullable, as the served tables were
+        best = spark.createDataFrame(rows, frame.schema.simpleString())
         bests.append(best)
-        if final_seq or i < _BPE_MERGES - 1:
+        if final_seq or i < rounds - 1:
             prev = seq
             seq = seq.crossJoin(F.broadcast(best)).select(
                 F.expr(_bpe_seq_rewrite_sql("seq", "pair")).alias("seq"), "cnt"
@@ -823,6 +819,34 @@ def _bpe_train(spark: SparkSession, sf_dir: str, final_seq: bool):
     else:
         seq.unpersist()
     return bests, (seq if final_seq else None)
+
+
+def _seq_pairs(seq: DataFrame) -> DataFrame:
+    """Weighted adjacent symbol-pair counts ``(pair, pc)`` of a word-type
+    table."""
+    return (
+        seq.select(
+            F.explode(F.expr(spark_bigram_sql("split(seq, ' ')"))).alias("pair"),
+            "cnt",
+        )
+        .groupBy("pair")
+        .agg(F.sum("cnt").cast("long").alias("pc"))
+    )
+
+
+def _bpe_argmax(seq: DataFrame) -> DataFrame:
+    """BPE's pick: the most frequent pair (count DESC, pair ASC)."""
+    return _seq_pairs(seq).orderBy(F.desc("pc"), F.asc("pair")).limit(1)
+
+
+def _merge_table(bests: list[DataFrame], *cols: str) -> DataFrame:
+    """The served merge table: one row per round, ``merge_rank`` first,
+    then ``cols`` (SQL expressions over the round's argmax row)."""
+    out = None
+    for i, best in enumerate(bests, start=1):
+        row = best.selectExpr(f"{i} AS merge_rank", *cols)
+        out = row if out is None else out.unionAll(row)
+    return out.orderBy("merge_rank")
 
 
 @query(
@@ -868,16 +892,8 @@ def q_text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference anchor: the reference engine (indexjs.go:73-191) has no
     tokenizer surface; this extends the LLM-pipeline text family beyond
     reference parity."""
-    bests, _ = _bpe_train(spark, sf_dir, final_seq=False)
-    out = None
-    for i, best in enumerate(bests, start=1):
-        row = best.select(
-            F.lit(i).alias("merge_rank"),
-            "pair",
-            F.col("pc").alias("pair_count"),
-        )
-        out = row if out is None else out.unionAll(row)
-    return out.orderBy("merge_rank")
+    bests, _ = _train_merges(spark, sf_dir, _bpe_argmax, _BPE_MERGES)
+    return _merge_table(bests, "pair", "pc AS pair_count")
 
 
 # ---------------------------------------------------------------------------
@@ -1055,8 +1071,8 @@ def q_text_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol-vocabulary size after merging (base characters + end-of-word
     + the surviving merged symbols).
 
-    Rides the SHARED training loop (``_bpe_train`` — one Spark spelling
-    for both BPE queries, the ``_dsir_weight_frame`` precedent), with
+    Rides the SHARED training loop (``_train_merges`` — one Spark spelling
+    for every merge trainer, the ``_dsir_weight_frame`` precedent), with
     ``final_seq=True`` so the last round's rewrite — dead code for the
     merge-mining query — is built and persisted here where it has two
     readers (the token sum and the vocabulary count).
@@ -1067,7 +1083,9 @@ def q_text_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over documents for the base-vocab token count — the apply
     itself never rescans the corpus because Sennrich tokenization is a
     pure function of the word-TYPE table."""
-    bests, seqf = _bpe_train(spark, sf_dir, final_seq=True)
+    bests, seqf = _train_merges(
+        spark, sf_dir, _bpe_argmax, _BPE_MERGES, final_seq=True
+    )
     d = _t(spark, sf_dir, "documents")
     bef = d.agg(
         F.sum(F.length("text") + 1).cast("long").alias("tokens_before")
@@ -1696,6 +1714,31 @@ _WP_SCORE = (
 )
 
 
+def _wp_argmax(seq: DataFrame) -> DataFrame:
+    """WordPiece's pick: the pair maximizing ``_WP_SCORE`` (score DESC,
+    pair ASC), with the symbol counts ``ca``/``cb`` of its halves in the
+    current sequences."""
+    s = (
+        seq.select(F.explode(F.split("seq", " ")).alias("sym"), "cnt")
+        .groupBy("sym")
+        .agg(F.sum("cnt").cast("long").alias("c"))
+    )
+    return (
+        _seq_pairs(seq)
+        .join(
+            s.select(F.col("sym").alias("la"), F.col("c").alias("ca")),
+            F.substring_index("pair", " ", 1) == F.col("la"),
+        )
+        .join(
+            s.select(F.col("sym").alias("lb"), F.col("c").alias("cb")),
+            F.substring_index("pair", " ", -1) == F.col("lb"),
+        )
+        .select("pair", "pc", "ca", "cb")
+        .orderBy(F.expr(_WP_SCORE).desc(), F.asc("pair"))
+        .limit(1)
+    )
+
+
 def _wp_duck_iter(i: int, prev: str) -> str:
     """One unrolled WordPiece training round in DuckDB SQL: weighted pair
     AND symbol counts over the word-type table, likelihood-ratio argmax,
@@ -1784,79 +1827,15 @@ def q_text_wordpiece_train_merges(
     Reference anchor: the reference engine (indexjs.go:73-191) has no
     tokenizer surface; this extends the LLM-pipeline tokenizer family
     beyond reference parity."""
-    d = _t(spark, sf_dir, "documents")
-    wf = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    bests, _ = _train_merges(spark, sf_dir, _wp_argmax, _WP_MERGES)
+    return _merge_table(
+        bests,
+        "pair",
+        "pc AS pair_count",
+        "ca AS left_count",
+        "cb AS right_count",
+        f"round({_WP_SCORE}, 6) + 0.0 AS score",
     )
-    seq = wf.select(
-        F.concat(
-            F.trim(F.regexp_replace("w", "(.)", "$1 ")), F.lit(" " + _BPE_EOW)
-        ).alias("seq"),
-        "cnt",
-    ).persist(StorageLevel.MEMORY_ONLY)
-
-    # Per-round argmax rows are COLLECTED (1 row each — bounded metadata,
-    # the _bpe_train spelling) so round i's word-type cache can unpersist
-    # the moment round i+1's argmax job materializes its successor;
-    # superseded |vocab|-row rounds otherwise stay cached for the life of
-    # the session (r14 ADVICE). The rounded score is computed Spark-side
-    # BEFORE the collect, so the served value is the identical engine fp
-    # chain either way.
-    out_rows = []
-    prev = None
-    for i in range(1, _WP_MERGES + 1):
-        pairs = seq.select(
-            F.explode(F.expr(spark_bigram_sql("split(seq, ' ')"))).alias("pair"),
-            "cnt",
-        )
-        g = pairs.groupBy("pair").agg(F.sum("cnt").cast("long").alias("pc"))
-        s = (
-            seq.select(F.explode(F.split("seq", " ")).alias("sym"), "cnt")
-            .groupBy("sym")
-            .agg(F.sum("cnt").cast("long").alias("c"))
-        )
-        rows = (
-            g.join(
-                s.select(F.col("sym").alias("la"), F.col("c").alias("ca")),
-                F.substring_index("pair", " ", 1) == F.col("la"),
-            )
-            .join(
-                s.select(F.col("sym").alias("lb"), F.col("c").alias("cb")),
-                F.substring_index("pair", " ", -1) == F.col("lb"),
-            )
-            .select("pair", "pc", "ca", "cb")
-            .orderBy(F.expr(_WP_SCORE).desc(), F.asc("pair"))
-            .limit(1)
-            .selectExpr(
-                f"{i} AS merge_rank",
-                "pair",
-                "pc AS pair_count",
-                "ca AS left_count",
-                "cb AS right_count",
-                f"round({_WP_SCORE}, 6) + 0.0 AS score",
-            )
-            .collect()
-        )
-        if prev is not None:
-            prev.unpersist()
-        out_rows.extend(rows)
-        if i < _WP_MERGES:
-            best = spark.createDataFrame(
-                [(r["pair"],) for r in rows], "pair string"
-            )
-            prev = seq
-            seq = seq.crossJoin(F.broadcast(best)).select(
-                F.expr(_bpe_seq_rewrite_sql("seq", "pair")).alias("seq"),
-                "cnt",
-            ).persist(StorageLevel.MEMORY_ONLY)
-    seq.unpersist()
-    return spark.createDataFrame(
-        out_rows,
-        "merge_rank int, pair string, pair_count long,"
-        " left_count long, right_count long, score double",
-    ).orderBy("merge_rank")
 
 
 #: near-dup DECISION threshold, applied as the exact integer
@@ -2468,7 +2447,7 @@ c{tag} AS (SELECT piece, CAST(SUM(cnt) AS BIGINT) AS c
 
 #: the TRAIN chain (seed -> EM round 1 -> prune -> refit -> EM round 2),
 #: shared verbatim by the trainer's oracle and the apply/fertility
-#: oracle (the `_bpe_train` one-spelling rule): each oracle prepends its
+#: oracle (the `_train_merges` one-spelling rule): each oracle prepends its
 #: own `wf` definition and consumes dp2/c2.
 _UNI_TRAIN_CTES = f"""
     subs AS MATERIALIZED (SELECT piece, CAST(SUM(cnt) AS BIGINT) AS c
@@ -2598,7 +2577,7 @@ def _uni_train_vocab(spark: SparkSession, wf: DataFrame) -> list:
     """THE one Spark spelling of the unigram-LM training chain (seed ->
     Viterbi hard-EM round -> prune + add-one refit), shared by the
     trainer query and the apply/fertility query so the learned model
-    can never fork between them (the ``_bpe_train`` rule). Returns the
+    can never fork between them (the ``_train_merges`` rule). Returns the
     final vocabulary as a bounded (piece, micro-ln) list — the model
     artifact (<= ``_UNI_KEEP`` + alphabet rows); its two collects are
     bounded METADATA, never data-sized."""
@@ -2977,7 +2956,7 @@ def q_text_unigram_apply_fertility(
     train→apply ladder ([q:text_bpe_train_merges] →
     [q:text_bpe_apply_merges]): re-derive the final vocabulary through
     the SHARED training chain (``_uni_train_vocab`` — one spelling, the
-    ``_bpe_train`` rule), Viterbi-segment every word type under it, and
+    ``_train_merges`` rule), Viterbi-segment every word type under it, and
     serve the per-source tokenizer-quality scorecard real pipelines gate
     on: token/char/piece volumes, FERTILITY (pieces per word — the
     standard cross-tokenizer comparison metric, e.g. Rust et al.

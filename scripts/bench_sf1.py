@@ -32,15 +32,15 @@ from pyspark.sql import functions as F  # noqa: E402
 from mapreduceindex_demo_spark.oracle_harness import (  # noqa: E402
     duck_connect,
     duck_forced_sql,
-    spark_forced_expr,
 )
 from mapreduceindex_demo_spark.plans import QUERIES  # noqa: E402
 from mapreduceindex_demo_spark.session import (  # noqa: E402
     TABLE_NAMES,
     get_spark,
     load_table,
-    table_path,
 )
+from perfbench.common import Tracer, clear_caches, median  # noqa: E402
+from perfbench.query_suite import _call  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 
@@ -131,61 +131,40 @@ def main() -> None:
     # oracle_harness so the two tables stay methodology-identical.
     con = duck_connect(args.out)
 
-    # Timing methodology (round-6 correction, BASELINE.md): the headline
-    # numbers are SYMMETRIC FORCED timings — each engine runs a checksum
-    # aggregate over every output column of the same query, so both fully
-    # materialize every value and neither pays result transfer. The legacy
-    # asymmetric pair (Spark .count() — prunable; DuckDB fetchall —
-    # transfer-inflated) is kept in the JSON for cross-round comparability.
-    def _median(runs):
-        return sorted(runs)[len(runs) // 2]
-
+    # Both sides run a checksum aggregate over every output column of the
+    # same query, so both fully materialize every value and neither pays
+    # result transfer. The Spark side is perfbench's cold call (caches
+    # cleared first; q.fn and the forcing action timed together), the
+    # DuckDB side its forced SQL; each side runs once untimed first.
+    tracer = Tracer(spark, False)
     rows = []
     for name, q in bench.items():
-        s_force = spark_forced_expr(q.fn(spark, args.out).columns)
         d_force = duck_forced_sql(con, q.oracle)
-        # Spark
-        q.fn(spark, args.out).selectExpr(s_force).collect()  # warm
-        s_runs, sf_runs = [], []
+        clear_caches(spark)
+        _call(spark, tracer, name, args.out)  # warm
+        s_runs = []
         for _ in range(args.reps):
-            t0 = time.perf_counter()
-            q.fn(spark, args.out).count()
-            s_runs.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            q.fn(spark, args.out).selectExpr(s_force).collect()
-            sf_runs.append(time.perf_counter() - t0)
-        # DuckDB
+            clear_caches(spark)
+            s_runs.append(_call(spark, tracer, name, args.out)[2]["seconds"])
         con.execute(d_force).fetchall()  # warm
-        d_runs, df_runs = [], []
+        d_runs = []
         for _ in range(args.reps):
-            t0 = time.perf_counter()
-            con.execute(q.oracle).fetchall()
-            d_runs.append(time.perf_counter() - t0)
             t0 = time.perf_counter()
             con.execute(d_force).fetchall()
-            df_runs.append(time.perf_counter() - t0)
-        rec = (
-            name,
-            round(_median(sf_runs), 3),
-            round(_median(df_runs), 3),
-            round(_median(s_runs), 3),
-            round(_median(d_runs), 3),
-        )
+            d_runs.append(time.perf_counter() - t0)
+        rec = (name, round(median(s_runs), 3), round(median(d_runs), 3))
         rows.append(rec)
         print(
-            f"# {name}: forced spark={rec[1]:.3f}s duckdb={rec[2]:.3f}s "
-            f"(legacy counted={rec[3]:.3f}s fetchall={rec[4]:.3f}s)",
+            f"# {name}: spark cold={rec[1]:.3f}s duckdb forced={rec[2]:.3f}s",
             file=sys.stderr,
         )
+    clear_caches(spark)
 
-    print("| query | spark forced (s) | duckdb forced (s) | ratio |")
+    print("| query | spark cold (s) | duckdb forced (s) | ratio |")
     print("|---|---|---|---|")
-    s_tot = d_tot = sl_tot = dl_tot = 0.0
-    for name, s_t, d_t, sl, dl in rows:
-        s_tot += s_t
-        d_tot += d_t
-        sl_tot += sl
-        dl_tot += dl
+    s_tot = sum(r[1] for r in rows)
+    d_tot = sum(r[2] for r in rows)
+    for name, s_t, d_t in rows:
         print(f"| {name} | {s_t} | {d_t} | {s_t / max(d_t, 1e-9):.2f}x |")
     print(f"| **total** | {s_tot:.3f} | {d_tot:.3f} | {s_tot / d_tot:.2f}x |")
     print(
@@ -195,12 +174,7 @@ def main() -> None:
                 "spark_sec": round(s_tot, 3),
                 "duckdb_sec": round(d_tot, 3),
                 "ratio": round(s_tot / d_tot, 3),
-                "legacy_spark_counted_sec": round(sl_tot, 3),
-                "legacy_duckdb_fetchall_sec": round(dl_tot, 3),
-                "queries": {
-                    n: {"spark": s, "duckdb": d, "spark_counted": sl, "duckdb_fetchall": dl}
-                    for n, s, d, sl, dl in rows
-                },
+                "queries": {n: {"spark": s, "duckdb": d} for n, s, d in rows},
             }
         )
     )

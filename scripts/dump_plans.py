@@ -1,20 +1,18 @@
-"""Dump `.explain("formatted")` for registered queries + red-flag scan.
+"""One-line-per-query plan summary with a red-flag scan.
 
-Optimization-round tooling (guide §1.2/§7.2): builds every requested
-query's DataFrame (driver-only — no job runs) and writes the formatted
-physical plan to ``--out/<query>_<tag>.txt``. After dumping, scans each
-plan for the anti-patterns the 100 TB brief forbids and prints a
-one-line-per-query summary:
+Builds every requested query's DataFrame (driver-only for most queries;
+iterative builders may run jobs while building) and scans its formatted
+physical plan for the anti-patterns the 100 TB brief forbids:
 
 - ``BatchEvalPython`` / ``ArrowEvalPython`` — a row-at-a-time Python
   boundary in a query path (guide §4);
 - ``CartesianProduct`` — an unbounded cross join (guide §3);
 - Exchange count — the shuffle budget (guide §2);
-- scans whose ReadSchema is the full table width (pruning defeated).
+- ``SortMergeJoin`` count.
 
 Usage:
-  python scripts/dump_plans.py --out plans/r16 --tag before \
-      [--only q1,q2] [--bench-only] [--sf /root/testdata/sf0.1]
+  python scripts/dump_plans.py [--only q1,q2] [--bench-only] \
+      [--sf /root/testdata/sf0.1]
 """
 
 from __future__ import annotations
@@ -43,7 +41,6 @@ def scan(name: str, text: str) -> str:
     n_ex = len(re.findall(r"\bExchange\b", text))
     flags = []
     for bad in ("BatchEvalPython", "ArrowEvalPython", "CartesianProduct"):
-        k = text.count(f"+- {bad}") + text.count(f"({bad}")
         if bad in text:
             flags.append(f"{bad}x{len(re.findall(bad, text))}")
     if "SortMergeJoin" in text:
@@ -53,17 +50,13 @@ def scan(name: str, text: str) -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="plans/r16")
-    ap.add_argument("--tag", default="before")
     ap.add_argument("--only", default=None)
     ap.add_argument("--bench-only", action="store_true")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--summary-only", action="store_true", help="scan without writing files")
     args = ap.parse_args()
 
     spark = get_spark(app_name="plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(args.out, exist_ok=True)
 
     if args.only:
         names = [n.strip() for n in args.only.split(",") if n.strip()]
@@ -75,15 +68,11 @@ def main() -> int:
     failures = []
     for name in names:
         try:
-            df = QUERIES[name].fn(spark, args.sf)
-            text = plan_text(df)
+            text = plan_text(QUERIES[name].fn(spark, args.sf))
         except Exception as e:  # noqa: BLE001 - report and continue
             failures.append(name)
             print(f"{name}: PLAN-BUILD ERROR {type(e).__name__}: {e}", file=sys.stderr)
             continue
-        if not args.summary_only:
-            with open(os.path.join(args.out, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(text)
         print(scan(name, text))
         # iterative plan builders may persist helper frames; drop them so a
         # full-registry sweep doesn't accumulate executor storage

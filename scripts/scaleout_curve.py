@@ -1,13 +1,13 @@
-"""Scale-out curve datapoint: ONE (query, cpu-count, data-dir) forced
-timing in a fresh JVM — the single-machine proxy for executor-slot
-scale-out (BASELINE.md rounds 8-9). Run once per combination so every
-measurement gets its own JVM:
+"""Scale-out curve datapoint: ONE (query, cpu-count, data-dir) timing
+through perfbench's cold call, in a fresh JVM — the single-machine proxy
+for executor-slot scale-out (BASELINE.md rounds 8-9). Run once per
+combination so every measurement gets its own JVM:
 
     python scripts/scaleout_curve.py <cpus> <query> <data_dir> [reps=3]
 
-Prints one JSON line with the per-rep forced timings, the median, and
-the same contention-sentinel fields bench.py stamps (probe_sec / noisy):
-a curve cell measured under co-running load must carry the flag, or a
+Prints one JSON line with the per-rep timings, the median, and the
+same contention-sentinel fields bench.py stamps (probe_sec / noisy): a
+curve cell measured under co-running load must carry the flag, or a
 polluted datapoint could masquerade as a clean speedup. Spark-only: the
 curve compares Spark against itself at 8 vs 32 slots; the DuckDB
 comparison lives in scripts/bench_sf1.py.
@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,15 +28,15 @@ def main() -> None:
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     from bench import _PROBE_REF_SEC, _probe
-    from mapreduceindex_demo_spark.oracle_harness import spark_forced_expr
-    from mapreduceindex_demo_spark.plans import QUERIES
     from mapreduceindex_demo_spark.session import get_spark
+    from perfbench.common import Tracer, clear_caches, median
+    from perfbench.query_suite import _call
 
     spark = get_spark(app_name=f"scaleout-{name}-{cpus}")
     spark.sparkContext.setLogLevel("ERROR")
-    q = QUERIES[name]
-    force = spark_forced_expr(q.fn(spark, data).columns)
-    q.fn(spark, data).selectExpr(force).collect()  # warm (JIT + page cache)
+    tracer = Tracer(spark, False)
+    clear_caches(spark)
+    _call(spark, tracer, name, data)  # warm (JIT + page cache)
     # probes BRACKET the timed region, after the warm run (the bench.py
     # r9 fix, applied here in r10: a fresh JVM's pre-warm-up probe reads
     # 0.18-0.26 s on a QUIET machine — JIT/GC settling, not contention —
@@ -45,9 +44,9 @@ def main() -> None:
     probe_before = _probe(spark)
     runs = []
     for _ in range(reps):
-        t0 = time.perf_counter()
-        q.fn(spark, data).selectExpr(force).collect()
-        runs.append(round(time.perf_counter() - t0, 2))
+        clear_caches(spark)
+        runs.append(round(_call(spark, tracer, name, data)[2]["seconds"], 2))
+    clear_caches(spark)
     probe_after = _probe(spark)
     # NOTE: the probe reference is SLOT-INVARIANT, measured, not modeled
     # (round 10; the r9 version scaled it by 32/cpus, which over-relaxed
@@ -66,7 +65,7 @@ def main() -> None:
                 "cpus": int(cpus),
                 "data": data,
                 "runs": runs,
-                "median": sorted(runs)[len(runs) // 2],
+                "median": median(runs),
                 "probe_sec": probe,
                 "probe_ref_sec": round(ref, 4),
                 "noisy": probe > 1.5 * ref,

@@ -5,6 +5,7 @@ emptied-cell partition drop."""
 from __future__ import annotations
 
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -201,3 +202,30 @@ def test_apply_changes_releases_its_batch(spark, corpus):
             .collect()
         }
         assert _state(idx) == expected
+
+
+def _cell_files(path):
+    """Every file under the cells layout: relative path -> bytes."""
+    root = Path(path, "cells")
+    return {p.relative_to(root): p.read_bytes() for p in root.rglob("*") if p.is_file()}
+
+
+def test_apply_changes_rejects_unknown_op(spark, corpus):
+    """An op other than upsert/delete/expiration raises before any cell is
+    rewritten, instead of silently deleting the vector: a batch holding one
+    good upsert and one ``"bogus"`` op on an indexed vector leaves every
+    cell file byte-identical."""
+    first = corpus.where(F.col("vec_id") <= 30)
+    with tempfile.TemporaryDirectory(prefix="mrix_vidx_") as path:
+        idx = IVFVectorIndex.build(first, path, k=4, iters=1)
+        before = _cell_files(path)
+        changes = (
+            corpus.where(F.col("vec_id") == 31)
+            .withColumn("op", F.lit("upsert"))
+            .unionByName(
+                first.where(F.col("vec_id") == 7).withColumn("op", F.lit("bogus"))
+            )
+        )
+        with pytest.raises(Exception, match="unknown CDC op"):
+            idx.apply_changes(changes)
+        assert _cell_files(path) == before
